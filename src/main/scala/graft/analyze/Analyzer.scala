@@ -8,21 +8,15 @@ import org.apache.spark.sql.functions._
   * as `tokenizer: {field: [f1, f2, ...]}`, docs/config.md:35-67).
   *
   * The reference composes `Set[String] => Set[String]` stages; here each
-  * analyzer is (a) a plain Scala function for typed Dataset flatMaps and the
-  * brute-force oracle, and (b) an equivalent Column expression so the same
-  * tokenization runs codegen'd inside Catalyst — both MUST agree exactly
-  * (AnalyzerSpec asserts it).
+  * analyzer is one Scala function, [[Analyzer.tokens]]: typed Dataset
+  * flatMaps call it directly and Column contexts call it through
+  * [[Analyzer.tokensUdf]], so every path tokenizes with the same code.
   */
 trait Analyzer extends Serializable {
   /** Token stream of one value (duplicates preserved; tf counted downstream). */
   def tokens(text: String): Seq[String]
-  /** Column form: array<string> of the same tokens, same order. */
-  def tokensCol(c: Column): Column
-  /** Compiled column form: the same tokens via a UDF over [[tokens]].
-    * Value-identical to [[tokensCol]] (AnalyzerSpec asserts the two
-    * agree), but Spark evaluates tokensCol's higher-order filter lambdas
-    * interpreted per element — build-hot scans (norms dl, corpus avgdl)
-    * use this compiled twin instead. */
+  /** Column form: array<string> of [[tokens]] via a compiled UDF (null
+    * text -> empty array, as tokens(null) is empty). */
   lazy val tokensUdf: org.apache.spark.sql.expressions.UserDefinedFunction = {
     val self = this
     org.apache.spark.sql.functions.udf((s: String) => self.tokens(s))
@@ -41,7 +35,8 @@ trait Analyzer extends Serializable {
   *
   * The exact same semantics are expressible in ANSI/DuckDB SQL as
   * `regexp_extract_all(lower(text), '[a-z0-9]+')` + length filter, which is
-  * what the driver-side oracle uses — keep the three forms in lockstep.
+  * what the DuckDB oracle uses — [[tokensCol]] is that expression in
+  * Spark, kept as the test reference that mirrors the oracle SQL.
   */
 object TextAnalyzer extends Analyzer {
   val MinLen = 2
@@ -55,10 +50,13 @@ object TextAnalyzer extends Analyzer {
       .toVector
   }
 
-  override def tokensCol(c: Column): Column =
-    // null text -> empty array, NOT null — tokens() returns Seq.empty and the
-    // two forms must agree strictly (a null here would poison size() in the
-    // norms stage and skew Column-form avgdl vs the Scala oracle)
+  /** Declarative twin of [[tokens]]: the oracle SQL's regex + length band
+    * as Spark Column functions. Specs check the Scala tokenizer against it,
+    * and the per-doc `Dedup.minhash` mirrors the oracle with it. Hot paths
+    * use [[tokensUdf]] instead, because Spark runs this form's `filter`
+    * lambda interpreted, once per element. Null text gives an empty array,
+    * not null, exactly like tokens(null). */
+  def tokensCol(c: Column): Column =
     when(c.isNull, array().cast("array<string>")).otherwise(
       filter(
         regexp_extract_all(lower(c), lit("[a-z0-9]+"), lit(0)),
@@ -73,10 +71,6 @@ object KeywordAnalyzer extends Analyzer {
     if (text == null) return Seq.empty
     val t = text.trim.toLowerCase(java.util.Locale.ROOT)
     if (t.isEmpty) Seq.empty else Seq(t)
-  }
-  override def tokensCol(c: Column): Column = {
-    val t = lower(trim(c))
-    when(c.isNull || t === "", array().cast("array<string>")).otherwise(array(t))
   }
 }
 

@@ -1,8 +1,5 @@
 package graft.analyze
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{array, col, lit, udf, when}
-
 /** Config-driven composable tokenizer chains — the rebuild of the
   * reference's whole per-field extension model: `tokenizer: {field:
   * [f1, f2, ...]}` chained left-to-right through a named-function registry
@@ -102,14 +99,6 @@ final case class ChainAnalyzer(chainSpec: String) extends Analyzer {
     if (text == null) return Seq.empty
     stages.foldLeft(Seq(text))((ts, st) => st(ts))
   }
-
-  /** Column form: a Scala UDF over tokens(). Chains are for auxiliary fields
-    * (url/path/ip namespaces); the hot `text` field keeps the native
-    * codegen'd TextAnalyzer column. */
-  override def tokensCol(c: Column): Column = {
-    val f = udf((s: String) => tokens(s))
-    when(c.isNull, array().cast("array<string>")).otherwise(f(c))
-  }
 }
 
 /** Broadcast-payload analyzers — the Spark analog of the reference shipping
@@ -140,10 +129,6 @@ object BroadcastAnalyzers {
                                      n: Int, fp: String) extends Analyzer {
     override def tokens(text: String): Seq[String] =
       inner.tokens(text).filterNot(bl.value.contains)
-    override def tokensCol(c: Column): Column = {
-      val f = udf((s: String) => tokens(s))
-      when(c.isNull, array().cast("array<string>")).otherwise(f(c))
-    }
     override def spec: String = s"${inner.spec}|bcast-blacklist:$n:$fp"
   }
 
@@ -151,10 +136,6 @@ object BroadcastAnalyzers {
                                    n: Int, fp: String) extends Analyzer {
     @transient private lazy val delegate = CjkDictAnalyzer(bd.value)
     override def tokens(text: String): Seq[String] = delegate.tokens(text)
-    override def tokensCol(c: Column): Column = {
-      val f = udf((s: String) => tokens(s))
-      when(c.isNull, array().cast("array<string>")).otherwise(f(c))
-    }
     override def spec: String = s"bcast-cjkdict:$n:$fp"
   }
 
@@ -234,11 +215,6 @@ final case class CjkDictAnalyzer(dict: Set[String]) extends Analyzer {
     }
     out.toSeq
   }
-
-  override def tokensCol(c: Column): Column = {
-    val f = udf((s: String) => tokens(s))
-    when(c.isNull, array().cast("array<string>")).otherwise(f(c))
-  }
 }
 
 /** CJK-capable analyzer: latin runs tokenize under TextAnalyzer's rules; CJK
@@ -292,10 +268,5 @@ object CjkBigramAnalyzer extends Analyzer {
       }
     }
     out.toSeq
-  }
-
-  override def tokensCol(c: Column): Column = {
-    val f = udf((s: String) => tokens(s))
-    when(c.isNull, array().cast("array<string>")).otherwise(f(c))
   }
 }

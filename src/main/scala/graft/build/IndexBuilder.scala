@@ -84,9 +84,9 @@ object IndexBuilder {
     * dl (per-field doc length) carried for local scoring.
     *
     * One typed flatMap, NO shuffle: a turn's tokens live in its own row, so
-    * tf is countable in place — exactly the reference's map-side shape. (The
-    * Column-expression tokenizer is behaviorally identical — AnalyzerSpec —
-    * and remains the form used by oracle-checked gate queries.)
+    * tf is countable in place — exactly the reference's map-side shape.
+    * Each field's tokens come from its analyzer's Scala [[Analyzer.tokens]],
+    * the one tokenizer every build and gate path shares.
     */
   def termOccs(docs: DataFrame,
                analyzers: Map[String, Analyzer] = Analyzers.byField): DataFrame = {
@@ -122,16 +122,6 @@ object IndexBuilder {
       }
       .toDF()
       .select(col("field"), col("term"), col("docId"), col("tf"), col("dl"))
-  }
-
-  /** Per-field avgdl over ALL docs (zero-token docs included — the oracle
-    * uses the same definition). */
-  def corpusAvgdl(docs: DataFrame,
-                  analyzers: Map[String, Analyzer] = Analyzers.byField): Map[String, Double] = {
-    val fields = fieldsOf(analyzers)
-    val aggs = fields.map(f => avg(size(analyzers(f).tokensUdf(col(f)))).as(f))
-    val row = docs.select(aggs: _*).collect()(0)
-    fields.zipWithIndex.map { case (f, i) => f -> row.getDouble(i) }.toMap
   }
 
   /** Full build: docIds -> docstore + postings + termstats + manifest.
@@ -175,11 +165,12 @@ object IndexBuilder {
       }
     }
 
-    val verbose = sys.env.contains("GRAFT_BUILD_VERBOSE")
+    // wall time per build phase, recorded in _manifest/core.json (phasesMs)
+    val phasesMs = scala.collection.mutable.ArrayBuffer[(String, Long)]()
     var tPhase = System.nanoTime()
-    def phase(name: String): Unit = if (verbose) {
+    def phase(name: String): Unit = {
       val now = System.nanoTime()
-      System.err.println(f"[build] $name: ${(now - tPhase) / 1e9}%.2fs")
+      phasesMs += name -> (now - tPhase) / 1000000L
       tPhase = now
     }
 
@@ -193,7 +184,7 @@ object IndexBuilder {
     // pass — it rides out of the norms job below (sum_dl/n_docs columns),
     // which already tokenizes every field once.
     val (docs, sortedHandle, numDocs) = DocIds.assignWithHandle(turns, cfg.docIdPartitions)
-    phase("docids+count")
+    phase("docids")
     // analyzer config identity rides in the id: a field set or chain change
     // must invalidate resume, not silently reuse old postings
     val cfgHash = (fields.map(f => s"$f=${analyzers(f).spec}").mkString(";").hashCode
@@ -266,60 +257,15 @@ object IndexBuilder {
       .withColumn("bucket", bucketCol(col("term"), cfg.buckets))
       .withColumn("chunk", (col("docId") / cfg.chunkDocs).cast("long"))
 
-    // Posting grouping: hash UDAF by default, sort-based selectable.
-    // Round 5 first flipped the default to a Tungsten sort shuffle +
-    // streaming run-length grouper on the strength of a sequential A/B
-    // (61.4 vs 69.6 s at 2M turns) — but sequential whole-arm runs on this
-    // host bias toward whichever arm lands in the quieter window (the same
-    // failure mode as the sequential scaling legs), and a paired in-JVM
-    // interleaved A/B (tools.AggAb: sort rep, hash rep, alternating in one
-    // bound JVM) reversed the verdict at EVERY size/parallelism tested:
-    // sort/hash = 1.03 (4c/600k), 1.06 (32c/150k), 1.15 (32c/600k),
-    // 1.07 (32c/2M), hash reps the stabler arm throughout. The UDAF's
-    // per-group PostingBuf serde is real cost, but the sort path re-sorts
-    // ALL occurrence rows on a 5-part key where the hash path only shuffles
-    // them — measurement beats the narrative. Both paths produce identical
-    // groups (GoldenSpec digest); GRAFT_AGG (env) or conf graft.agg select
-    // per build, conf winning so one live JVM can alternate reps.
-    val aggMode = spark.conf.getOption("graft.agg")
-      .getOrElse(sys.env.getOrElse("GRAFT_AGG", "hash"))
-    val groupedRaw = (if (aggMode == "hash") {
-      val postingUdaf = udaf(PostingAgg)
-      occs.groupBy("field", "term", "bucket", "chunk")
-        .agg(postingUdaf(col("docId"), col("tf"), col("dl")).as("p"))
-    } else {
-      val sortedOccs = occs
-        .select(col("field"), col("term"), col("bucket"), col("chunk"),
-          col("docId"), col("tf"), col("dl"))
-        .repartition(col("bucket"), col("chunk"))
-        .sortWithinPartitions("bucket", "chunk", "field", "term", "docId")
-        .as[(String, String, Int, Long, Long, Int, Int)]
-      sortedOccs.mapPartitions { it =>
-        new Iterator[(String, String, Int, Long, PostingsOut)] {
-          private var cur: (String, String, Int, Long, Long, Int, Int) = _
-          private var live = it.hasNext
-          if (live) cur = it.next()
-          def hasNext: Boolean = live
-          def next(): (String, String, Int, Long, PostingsOut) = {
-            val f = cur._1; val t = cur._2; val b = cur._3; val c = cur._4
-            val db = new scala.collection.mutable.ArrayBuilder.ofLong
-            val tb = new scala.collection.mutable.ArrayBuilder.ofInt
-            val lb = new scala.collection.mutable.ArrayBuilder.ofInt
-            var inGroup = true
-            while (inGroup) {
-              db += cur._5; tb += cur._6; lb += cur._7
-              if (it.hasNext) {
-                cur = it.next()
-                inGroup = cur._1 == f && cur._2 == t && cur._3 == b && cur._4 == c
-              } else { live = false; inGroup = false }
-            }
-            (f, t, b, c, PostingsOut(db.result(), tb.result(), lb.result()))
-          }
-        }
-      }.toDF("field", "term", "bucket", "chunk", "p")
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-
-    if (verbose) { groupedRaw.count(); phase("postings:agg") } // diagnostic-only job
+    // Posting grouping: one hash-aggregate with the PostingAgg UDAF per
+    // (field, term, bucket, chunk). A sort-based alternative (re-sort every
+    // occurrence row on the 5-part key, then a streaming run-length grouper)
+    // produced identical groups but measured 3-15% slower at every size and
+    // parallelism tried (BASELINE.md), so the hash path is the only one.
+    val postingUdaf = udaf(PostingAgg)
+    val groupedRaw = occs.groupBy("field", "term", "bucket", "chunk")
+      .agg(postingUdaf(col("docId"), col("tf"), col("dl")).as("p"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // header stats: df (uv) + pv per term, reference header semantics
     // (InvertedIndexGenerateReducer.java:390-395). Derived from the chunk
@@ -336,7 +282,6 @@ object IndexBuilder {
       .groupBy("field", "term", "bucket")
       .agg(sum("dfc").as("df"), sum("pvc").as("pv"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (verbose) { stats.count(); phase("postings:stats") } // diagnostic-only job
 
     // optional truncation cap (isInvalidData mirror): running doc count per
     // term over chunk order; drop/trim chunks past the cap. The window
@@ -395,12 +340,12 @@ object IndexBuilder {
           .repartition(col("bucket"), col("chunk"))
           .sortWithinPartitions("field", "term", "chunk")
         part.write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/postings")
-        phase(s"postings g=$g")
+        phase(s"postings_g$g")
         stats.filter(col("bucket") % groups === g)
           .repartition(col("bucket")) // one task per bucket dir: files stay
           // bounded by #buckets, not tasks x buckets (commit cost is per file)
           .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/termstats")
-        phase(s"termstats g=$g")
+        phase(s"termstats_g$g")
         val wallMs = (System.nanoTime() - t0) / 1000000L
         // lineage + metrics per completed group, written atomically (tmp+rename)
         val tmp = new Path(manifestDir, s".group-$g.json.tmp")
@@ -414,15 +359,20 @@ object IndexBuilder {
     }
 
     val manifest = IndexManifest(buildId, numDocs, cfg.buckets, cfg.chunkDocs, cfg.blockSize, avgdl)
-    writeManifest(fs, new Path(manifestDir, "core.json"), manifest)
+    writeManifest(fs, new Path(manifestDir, "core.json"), manifest, phasesMs.toSeq)
     groupedRaw.unpersist(); stats.unpersist(); sortedHandle.unpersist()
     manifest
   }
 
-  def writeManifest(fs: org.apache.hadoop.fs.FileSystem, p: Path, m: IndexManifest): Unit = {
+  /** `phasesMs` (phase name -> wall ms, in build order) is written as an
+    * additive `phasesMs` object after the layout keys; [[readManifest]]
+    * does not need it. */
+  def writeManifest(fs: org.apache.hadoop.fs.FileSystem, p: Path, m: IndexManifest,
+                    phasesMs: Seq[(String, Long)]): Unit = {
     val avg = m.avgdl.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val phases = phasesMs.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val json =
-      s"""{"buildId":"${m.buildId}","numDocs":${m.numDocs},"buckets":${m.buckets},"chunkDocs":${m.chunkDocs},"blockSize":${m.blockSize},"avgdl":$avg}"""
+      s"""{"buildId":"${m.buildId}","numDocs":${m.numDocs},"buckets":${m.buckets},"chunkDocs":${m.chunkDocs},"blockSize":${m.blockSize},"avgdl":$avg,"phasesMs":$phases}"""
     val tmp = new Path(p.getParent, "." + p.getName + ".tmp")
     val out = fs.create(tmp, true)
     out.write(json.getBytes("UTF-8"))
@@ -441,8 +391,10 @@ object IndexBuilder {
     val s = new String(bytes, "UTF-8")
     def longOf(k: String): Long = s"""\"$k\":(\\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
     def strOf(k: String): String = (s"""\"$k\":\"([^\"]*)\"""").r.findFirstMatchIn(s).get.group(1)
+    // the avgdl object only: keys written after it (phasesMs) are not fields
+    val avgFrom = s.indexOf("\"avgdl\":") + 8
     val avg = """"(\w+)":([0-9.Ee+-]+)""".r.findAllMatchIn(
-      s.substring(s.indexOf("\"avgdl\":") + 8)).map(m => m.group(1) -> m.group(2).toDouble).toMap
+      s.substring(avgFrom, s.indexOf('}', avgFrom))).map(m => m.group(1) -> m.group(2).toDouble).toMap
     IndexManifest(strOf("buildId"), longOf("numDocs"), longOf("buckets").toInt,
       longOf("chunkDocs"), longOf("blockSize").toInt, avg)
   }

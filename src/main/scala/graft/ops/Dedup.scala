@@ -23,32 +23,22 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Analyzer-equivalent token extraction as a Column (same regex + length
-    * band as graft.analyze.TextAnalyzer — see AnalyzerSpec parity test). */
-  def toks(c: Column): Column =
-    filter(regexp_extract_all(lower(c), lit("[a-z0-9]+"), lit(0)),
-      t => length(t) >= 2 && length(t) <= 40)
-
-  /** Compiled twin of [[toks]]: the identical token array via
-    * [[graft.analyze.TextAnalyzer.tokens]] (AnalyzerSpec asserts
-    * tokens() == tokensCol(), and tokensCol IS the declarative expression
-    * [[toks]] wraps; OpsSpec asserts the two columns agree on the gate
-    * corpus). Spark evaluates the higher-order `filter` lambda in [[toks]]
-    * INTERPRETED per element — on token-heavy operators that interpreter
-    * loop dominates the scan (guide §1.2 "per-task work"); this UDF runs
-    * the whole tokenize+filter pass as compiled JVM code. Null text → null,
-    * exactly like the declarative form. */
+  /** Token array of `text` as a compiled UDF over
+    * [[graft.analyze.TextAnalyzer.tokens]] — the tokenizer every dedup and
+    * text operator shares (OpsSpec checks it against the declarative
+    * [[graft.analyze.TextAnalyzer.tokensCol]], the oracle SQL's form, on
+    * the gate corpus). Null text → null. */
   val toksC: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { text: String =>
       if (text == null) null
       else graft.analyze.TextAnalyzer.tokens(text).toArray
     }
 
-  /** Sorted DISTINCT token array as one compiled pass — the fused twin of
-    * `array_sort(array_distinct(toks(text)))` (TreeSet iteration order =
+  /** Sorted DISTINCT token array as one compiled pass — the fused form of
+    * `array_sort(array_distinct(toksC(text)))` (TreeSet iteration order =
     * String.compareTo = the sort order of array_sort on these ASCII
     * tokens, the same equivalence [[shingleStrings]] already relies on).
-    * Null text → null like [[toks]]. */
+    * Null text → null like [[toksC]]. */
   val tokenSetC: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { text: String =>
       if (text == null) null
@@ -70,10 +60,8 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** doc_id -> sorted distinct token array (the unit of set similarity).
-    * One compiled pass ([[tokenSetC]]) — value-identical to the former
-    * `array_sort(array_distinct(toks(text)))` chain, without the
-    * interpreted length-filter lambda. */
+  /** doc_id -> sorted distinct token array (the unit of set similarity),
+    * one compiled pass ([[tokenSetC]]). */
   private def tokenSets(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"), tokenSetC(col("text")).as("ts"))
 
@@ -239,21 +227,10 @@ object Dedup {
       out
     }
 
-  /** EVERY sliding window as a string, one per position (NOT distinct —
-    * substring dedup counts occurrences, so a within-doc repeat matters);
-    * compiled for the same interpreted-lambda reason as [[shingleHashes]].
-    * Consumed by [[TextOps.dupWindowCoverage]]. */
-  private[graft] def windowStrings(n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { toks: Seq[String] =>
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      foreachShingle(toks, n)(buf += _)
-      buf.toArray
-    }
-
   /** Every sliding window as a 64-bit xxhash64 fingerprint, one per
-    * position (the [[windowStrings]] twin for shuffles that should not
-    * carry n-token strings; NOT distinct, unlike [[shingleHashes]]).
-    * Consumed by [[TextOps.dupWindowCoverageFast]]. */
+    * position (NOT distinct, unlike [[shingleHashes]] — substring dedup
+    * counts occurrences, so a within-doc repeat matters). Consumed by
+    * [[TextOps.dupWindowCoverage]] and [[TextOps.lmScore]]. */
   private[graft] def windowHashes(n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { toks: Seq[String] =>
       val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -265,10 +242,9 @@ object Dedup {
     }
 
   /** Every bigram position as the triple (xxh64(prev+" "+cur), xxh64(prev),
-    * xxh64(cur)) — the aligned fingerprints [[TextOps.lmScoreFast]] needs to
-    * join the bigram AND both unigram count tables from one explode (the
-    * string form recovers prev/cur by splitting the bigram; a fingerprint
-    * is not splittable, so the triple ships all three). Seed 42 = the
+    * xxh64(cur)) — the aligned fingerprints [[TextOps.lmScore]] needs to
+    * join the bigram AND both unigram count tables from one explode (a
+    * fingerprint is not splittable, so the triple ships all three). Seed 42 = the
     * xxhash64 column function, so the keys match hashes of the train-side
     * strings; each token hashes once, not once per bigram. */
   private[graft] val bigramHashTriples
@@ -393,46 +369,29 @@ object Dedup {
     * ~candidates/136 sets; at 10⁸ candidates that is both a parallelism
     * floor and a per-task memory ceiling).
     *
-    * The candidate frame is consumed three times (count → routing-B, the
-    * (sid, pid) routing table, the scoring rows), so it is MATERIALIZED once
-    * up front via an eager localCheckpoint: candidate rows are two longs —
-    * the stored footprint is tiny relative to the corpus — every consumer
-    * reads the same stored rows (no correctness dependence on the caller's
-    * candidate plan being deterministic), and the blocks free automatically
-    * when the result is dropped. `blocks` overrides B for the
-    * routing-invariance spec only. */
+    * `groups` holds (sid, ts, members) with ts a sorted string set; `cand0`
+    * holds (sa, sb) set-id pairs. `blocks` overrides B for the
+    * routing-invariance spec only. private[graft]: SignatureStore routes
+    * its store-backed candidates through the same cogroup. */
   private[graft] def verifyCandidatePairs(groups: DataFrame, cand0: DataFrame,
                                           threshold: Double,
                                           blocks: Option[Int] = None): DataFrame = {
-    val spark = groups.sparkSession
-    import spark.implicits._
-    verifyCandidatePairsOf[Array[String]](groups, cand0, threshold, jaccardOf, blocks)
-  }
-
-  /** The generic core of the candidate-driven verify (scaladoc above):
-    * `S` is the set representation (sorted string arrays for the oracle
-    * surfaces, sorted long fingerprints for the fast paths), `jac` the
-    * matching merge-intersection kernel. private[graft]: SignatureStore
-    * routes its store-backed candidates through the same cogroup. */
-  private[graft] def verifyCandidatePairsOf[S](groups: DataFrame, cand0: DataFrame,
-                                        threshold: Double, jac: (S, S) => Double,
-                                        blocks: Option[Int] = None)(
-      implicit setEnc: org.apache.spark.sql.Encoder[(Int, S, Array[Long])]): DataFrame = {
     val spark = groups.sparkSession
     import spark.implicits._
     // The candidate frame is consumed three times (count → routing-B, the
     // (sid, pid) routing table, the scoring rows). A LAZY localCheckpoint +
     // the count() right below materializes it exactly once IN the count job
     // (eager ran a separate materialization job first — one extra Spark job
-    // per verify call for the same guarantee): every later consumer reads
-    // the same stored rows, so correctness never depends on the caller's
-    // candidate plan being deterministic (a sample/limit-derived frame is
-    // fine), and the blocks are freed by Spark's ContextCleaner when the
-    // result frame becomes unreachable — no global eviction slot, no
-    // cross-call interference, no unbounded accumulation (round-4 ADVICE).
-    // Footprint is two longs per candidate.
+    // per verify call for the same guarantee). The count runs even when
+    // `blocks` fixes B, so every later consumer reads the same stored rows
+    // and correctness never depends on the caller's candidate plan being
+    // deterministic (a sample/limit-derived frame is fine). The blocks are
+    // freed by Spark's ContextCleaner when the result frame becomes
+    // unreachable — no global eviction slot, no cross-call interference, no
+    // unbounded accumulation. Footprint is two longs per candidate.
     val cand = cand0.localCheckpoint(false)
-    val B = blocks.getOrElse(routingBlocksFor(cand.count()))
+    val nCand = cand.count()
+    val B = blocks.getOrElse(routingBlocksFor(nCand))
     require(B >= 1 && B <= MaxPairBlocks, s"routing blocks out of range: $B")
     def pidOf(sa: Long, sb: Long): Int = {
       val i = (sa % B).toInt; val j = (sb % B).toInt
@@ -443,21 +402,21 @@ object Dedup {
       .toDF("sid", "pid").distinct()
     val setsTagged = groups.join(sidPid, "sid")
       .select(col("pid"), col("ts"), col("members"))
-      .as[(Int, S, Array[Long])]
+      .as[(Int, Array[String], Array[Long])]
     val candTagged = cand.as[(Long, Long)].map { case (sa, sb) => (pidOf(sa, sb), sa, sb) }
     val thr = threshold
     setsTagged.groupByKey(_._1)
       .cogroup(candTagged.groupByKey(_._1)) { (pid, setsIt, candIt) =>
-        val bySid = scala.collection.mutable.HashMap[Long, (S, Array[Long])]()
+        val bySid = scala.collection.mutable.HashMap[Long, (Array[String], Array[Long])]()
         setsIt.foreach { case (_, ts, m) => bySid(m(0)) = (ts, m) }
-        def setOf(sid: Long): (S, Array[Long]) =
+        def setOf(sid: Long): (Array[String], Array[Long]) =
           bySid.getOrElse(sid, throw new IllegalStateException(
             s"verify routing invariant broken: set $sid absent from pair-group $pid " +
               s"(B=$B) — candidate generation and routing disagree"))
         candIt.flatMap { case (_, sa, sb) =>
           val (tsa, ma) = setOf(sa)
           val (tsb, mb) = setOf(sb)
-          val jv = jac(tsa, tsb)
+          val jv = jaccardOf(tsa, tsb)
           if (jv < thr) Iterator.empty
           else for { da <- ma.iterator; db <- mb.iterator }
             yield (math.min(da, db), math.max(da, db), jv)
@@ -540,28 +499,19 @@ object Dedup {
     * Scale shape: both sides explode to distinct n-gram shingle rows; the
     * benchmark side is the small one (eval sets are thousands of docs), so
     * the shingle equi-join broadcasts it when the planner sees fit; the
-    * aggregation is one hash-agg on doc_id. Shingles compare as STRINGS for
-    * oracle parity — at 100 TB the xxhash64 fingerprint form halves the
-    * shuffle (same shingleHashes machinery as the ngram members). */
-  def decontaminate(training: DataFrame, benchmark: DataFrame, n: Int): DataFrame =
-    decontaminateOn(training, benchmark,
-      df => df.select(col("doc_id"), explode(shingleStrings(n)(toksC(col("text")))).as("sh")))
-
-  /** Fingerprinted decontamination — [[decontaminate]] with xxhash64
-    * shingle FINGERPRINTS in the join instead of shingle strings: exact up
-    * to 64-bit fingerprint collisions (same hash family and quantified
-    * odds as ngramJaccardPairs) at roughly half the shuffle/broadcast
-    * bytes — a 5-gram shingle string averages ~30 UTF-8 bytes, its
-    * fingerprint is 8. Not an oracle surface (DuckDB cannot reproduce
-    * xxhash64), so the GATE keeps the string form; OpsSpec asserts
-    * row-for-row output parity on the gate corpus and OpsScale carries the
-    * at-scale timing. */
-  def decontaminateFast(training: DataFrame, benchmark: DataFrame, n: Int): DataFrame =
-    decontaminateOn(training, benchmark,
-      df => df.select(col("doc_id"), explode(shingleHashes(n)(toksC(col("text")))).as("sh")))
-
-  private def decontaminateOn(training: DataFrame, benchmark: DataFrame,
-                              shingleRows: DataFrame => DataFrame): DataFrame = {
+    * aggregation is one hash-agg on doc_id. Shingles join as 64-bit
+    * xxhash64 FINGERPRINTS ([[shingleHashes]]), not strings: a 5-gram
+    * shingle string averages ~30 UTF-8 bytes, its fingerprint is 8.
+    *
+    * Collision bound: the output equals the string-shingle count unless two
+    * distinct shingles share a fingerprint. For S distinct shingles across
+    * both corpora the expected number of colliding pairs is ≈ S²/2⁶⁵
+    * (~3·10⁻⁸ at S = 10⁶); a collision can move n_hits by one for the docs
+    * holding those shingles. The DuckDB oracle compares string shingles,
+    * and the gate matches it at sf0.01 and sf0.1. */
+  def decontaminate(training: DataFrame, benchmark: DataFrame, n: Int): DataFrame = {
+    def shingleRows(df: DataFrame): DataFrame =
+      df.select(col("doc_id"), explode(shingleHashes(n)(toksC(col("text")))).as("sh"))
     val benchShingles = shingleRows(benchmark).select(col("sh")).distinct()
     val hits = shingleRows(training)
       .join(benchShingles, "sh")
@@ -654,21 +604,13 @@ object Dedup {
     affineMins(ts.iterator.map(t => md5PrefixOf(md, t, 7)))
   }
 
-  /** Minhash signature of a 64-bit fingerprint set (the shingle-hash LSH
-    * fast path): fingerprints map into [0, MinhashP) via pmod exactly like
-    * the former `pmod(h, MinhashP)` column. */
-  private[graft] def minhashOfHashes(hs: Array[Long]): Array[Long] =
-    affineMins(hs.iterator.map { h =>
-      val m = h % MinhashP
-      if (m < 0) m + MinhashP else m
-    })
-
   /** MinHash signatures over distinct tokens: doc_id, mh0..mh15 (per doc —
     * used by specs; the LSH pipeline below computes the same signatures once
     * per distinct SET instead). */
   def minhash(documents: DataFrame): DataFrame = {
     val tok = documents
-      .select(col("doc_id"), explode(array_distinct(toks(col("text")))).as("term"))
+      .select(col("doc_id"),
+        explode(array_distinct(graft.analyze.TextAnalyzer.tokensCol(col("text")))).as("term"))
       .withColumn("h", h32(col("term")))
     val hashes = (0 until NumHashes).map { j =>
       min((col("h") * hashA(j) + hashB(j)) % MinhashP).as(s"mh$j")
@@ -713,12 +655,8 @@ object Dedup {
     * production deployment persists the signature/band table between daily
     * runs; the operator stays self-contained for the oracle). */
   def minhashLshIncremental(documents: DataFrame, freshFrom: Long,
-                            threshold: Double): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    finishPairs(lshPairsOfGroups[Array[String]](setGroups(documents), threshold,
-      minhashOfTerms, jaccardOf, freshFrom))
-  }
+                            threshold: Double): DataFrame =
+    finishPairs(lshPairsOfGroups(setGroups(documents), threshold, freshFrom))
 
   /** Shingle-based MinHash-LSH — the classic shingle→minhash→band pipeline:
     * the ORDER-AWARE near-dup family member that is also sub-quadratic
@@ -744,30 +682,8 @@ object Dedup {
       set.toArray(new Array[String](set.size))
     }
 
-  private def minhashLshOfGroups(groups: DataFrame, threshold: Double): DataFrame = {
-    val spark = groups.sparkSession
-    import spark.implicits._
-    finishPairs(lshPairsOfGroups[Array[String]](groups, threshold, minhashOfTerms, jaccardOf))
-  }
-
-  /** Shingle-LSH fast path: the same shingle→minhash→band→verify pipeline as
-    * ngramMinhashLsh, with signatures AND verification over 64-bit xxhash64
-    * shingle FINGERPRINTS instead of shingle strings — exact up to 64-bit
-    * collisions, like ngramJaccardPairs (same fingerprint function, same
-    * quantified odds). Candidate sets differ from the string variant only
-    * through the hash family, so expected LSH recall is identical; measured
-    * ~2× on the gate corpus (strings dominate both the minhash explode and
-    * the verify merge loop). Not an oracle surface — DuckDB cannot
-    * reproduce xxhash64 — so the GATE keeps ngramMinhashLsh; OpsScale and
-    * production-sized corpora use this one. */
-  def ngramMinhashLshFast(documents: DataFrame, n: Int, threshold: Double): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val sets = documents.select(col("doc_id"),
-      shingleHashes(n)(toksC(col("text"))).as("ts"))
-    finishPairs(lshPairsOfGroups[Array[Long]](setGroupsOf(sets), threshold,
-      minhashOfHashes, jaccardOfLongs))
-  }
+  private def minhashLshOfGroups(groups: DataFrame, threshold: Double): DataFrame =
+    finishPairs(lshPairsOfGroups(groups, threshold))
 
   /** Gate presentation tail shared by the pair operators: 6-dp rounding +
     * deterministic order. Kept OUT of the raw pipelines so graph consumers
@@ -779,17 +695,14 @@ object Dedup {
       .select(col("a"), col("b"), round(col("j"), 6).as("j"))
       .orderBy("a", "b")
 
-  /** The generic band pipeline behind minhashLsh/ngramMinhashLsh(+Fast):
-    * `mhsOf` computes the 16-minhash signature of one set IN PLACE
-    * (compiled kernel — the former explode + 16-column min-agg paid a
-    * full token explode and a second shuffle for the same values, see
-    * [[affineMins]]); `jac` is the verify kernel over set representation S.
+  /** The band pipeline behind minhashLsh/ngramMinhashLsh/keepers over
+    * sorted string sets: [[minhashOfTerms]] computes the 16-minhash
+    * signature of one set IN PLACE (compiled kernel — the former explode +
+    * 16-column min-agg paid a full token explode and a second shuffle for
+    * the same values, see [[affineMins]]); [[jaccardOf]] verifies.
     * Returns RAW (a, b, j) pairs — callers apply [[finishPairs]]. */
-  private def lshPairsOfGroups[S](groups: DataFrame, threshold: Double,
-                                  mhsOf: S => Array[Long], jac: (S, S) => Double,
-                                  freshFrom: Long = Long.MinValue)(
-      implicit setEnc: org.apache.spark.sql.Encoder[(Int, S, Array[Long])],
-      grpEnc: org.apache.spark.sql.Encoder[(Long, S, Array[Long])]): DataFrame = {
+  private def lshPairsOfGroups(groups: DataFrame, threshold: Double,
+                               freshFrom: Long = Long.MinValue): DataFrame = {
     val spark = groups.sparkSession
     import spark.implicits._
     val incremental = freshFrom != Long.MinValue
@@ -810,12 +723,12 @@ object Dedup {
     // is constant-true when not incremental and simply unused.
     val ff = freshFrom
     val mh = g.select(col("sid"), col("ts"), col("members"))
-      .as[(Long, S, Array[Long])]
-      .map { case (sid, ts, members) => (sid, mhsOf(ts), members.last >= ff) }
+      .as[(Long, Array[String], Array[Long])]
+      .map { case (sid, ts, members) => (sid, minhashOfTerms(ts), members.last >= ff) }
       .toDF("sid", "mhs", "fresh")
     val cand = bandCandidates(mh, incremental)
 
-    // CANDIDATE-DRIVEN block-local verify (shared verifyCandidatePairsOf):
+    // CANDIDATE-DRIVEN block-local verify (shared verifyCandidatePairs):
     // only sets that actually appear in a candidate pair ship to the
     // cogroup, routed to exactly the pair-groups where their candidates
     // live — verify shuffle volume AND per-task memory scale with
@@ -824,7 +737,7 @@ object Dedup {
     // threshold where candidates are rare). Joining the array columns onto
     // candidate ROWS instead (round-1 shape) deserializes the arrays once
     // PER PAIR — measured 7× slower.
-    val pairs = verifyCandidatePairsOf[S](g, cand, threshold, jac)
+    val pairs = verifyCandidatePairs(g, cand, threshold)
       .unionAll(sameSetPairs(g))
     // incremental semantic filter: a fresh-flagged GROUP may still expand to
     // stale×stale member pairs (the flag is any-member-fresh), and same-set
@@ -974,7 +887,12 @@ object Dedup {
     * graph is whatever similarity member produced `pairs` (LSH, exact
     * Jaccard, embedding…), so "drop the non-keepers" composes with any of
     * them. Reference has no dedup; the shape is the standard
-    * MinHashLSH→connected-components pipeline. */
+    * MinHashLSH→connected-components pipeline.
+    *
+    * Precondition: every doc_id in `pairs` (columns a, b) is a doc_id of
+    * `documents`. It is not checked: n_members counts the vertices of each
+    * component, so a pair endpoint outside `documents` would inflate the
+    * n_members of the documents in its component. */
   def keepersFromPairs(documents: DataFrame, pairs: DataFrame): DataFrame = {
     val comp = components(pairs)
     // component sizes from the COMPONENTS frame, not from the assigned
@@ -1001,13 +919,8 @@ object Dedup {
     * [[components]] the RAW pair frame: the graph only needs the (a, b)
     * edge set, so the gate-presentation round + global pair sort of
     * [[minhashLsh]] would be a pure throw-away exchange here. */
-  def keepers(documents: DataFrame, threshold: Double): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    keepersFromPairs(documents,
-      lshPairsOfGroups[Array[String]](setGroups(documents), threshold,
-        minhashOfTerms, jaccardOf))
-  }
+  def keepers(documents: DataFrame, threshold: Double): DataFrame =
+    keepersFromPairs(documents, lshPairsOfGroups(setGroups(documents), threshold))
 
   /** 32-bit SimHash per doc: bit b set when the tf-weighted sum of term hash
     * bits is positive. (The term hash is [[h32]]'s 28 bits, so sig bits

@@ -181,9 +181,15 @@ object IvfIndex {
   }
 
   /** Reload the quantizer persisted by build() — query-side probing must use
-    * the centroids the lists were built with, not a recomputation. */
+    * the centroids the lists were built with, not a recomputation. Throws
+    * IllegalStateException naming the missing sidecar when `dir` has none
+    * (an index from the older parquet-sidecar layout, or an incomplete
+    * build): such an index must be rebuilt. */
   def loadCentroids(spark: SparkSession, dir: String): Array[(Int, Array[Float])] = {
     val f = new java.io.File(s"$dir-centroids.bin")
+    if (!f.isFile) throw new IllegalStateException(
+      s"IVF centroid sidecar $f not found: the index at $dir predates the binary " +
+        "sidecar layout or is incomplete; rebuild it with IvfIndex.build")
     val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
       new java.io.FileInputStream(f)))
     try {

@@ -139,7 +139,7 @@ object SignatureStore {
     // shared verify cogroup then ships only candidate docs' token sets
     val groups = spark.read.parquet(s"$dir/tokensets")
       .select(col("ts"), array(col("doc_id")).as("members"), col("doc_id").as("sid"))
-    Dedup.verifyCandidatePairsOf[Array[String]](groups, cand, threshold, Dedup.jaccardOf)
+    Dedup.verifyCandidatePairs(groups, cand, threshold)
       .filter(col("b") >= lit(freshFrom))
       .select(col("a"), col("b"), round(col("j"), 6).as("j"))
       .orderBy("a", "b")

@@ -240,34 +240,24 @@ object TextOps {
     * cannot see.
     *
     * Shape: windows from a compiled UDF (one narrow pass), occurrence
-    * counts from ONE hash-agg on the window string, coverage from a
+    * counts from ONE hash-agg on the window key, coverage from a
     * co-partitioned join back + a doc_id agg — no self-join, no candidate
     * blow-up; the heavy shuffle is windows ≈ tokens rows, the same volume
-    * the index builder's tokenize pass already moves. At 100 TB use
-    * [[dupWindowCoverageFast]] — the same pipeline over xxhash64 window
-    * fingerprints (8 bytes per window in the shuffle instead of a
-    * `window`-token string); this string form is the oracle-exact gate
-    * path. */
-  def dupWindowCoverage(documents: DataFrame, window: Int): DataFrame =
-    dupCoverageOf(documents,
-      Dedup.windowStrings(window)(Dedup.toksC(col("text"))), window)
-
-  /** [[dupWindowCoverage]] over xxhash64 window FINGERPRINTS instead of
-    * window strings — the 100 TB form (the heavy shuffle carries 8 bytes
-    * per window instead of a `window`-token string), same trade as
-    * [[Dedup.decontaminateFast]]: identical output up to 64-bit collisions
-    * (a collision can only over-count a duplicate; expected colliding
-    * window pairs ≈ W²/2⁶⁵ for W distinct windows corpus-wide). The gate
-    * keeps the string form so the DuckDB oracle compares exact text;
-    * OpsSpec asserts row-for-row parity of the two forms. */
-  def dupWindowCoverageFast(documents: DataFrame, window: Int): DataFrame =
-    dupCoverageOf(documents,
-      Dedup.windowHashes(window)(Dedup.toksC(col("text"))), window)
-
-  private def dupCoverageOf(documents: DataFrame, windowsCol: org.apache.spark.sql.Column,
-                            window: Int): DataFrame = {
+    * the index build's tokenize pass already moves. Windows are keyed by
+    * their 64-bit xxhash64 FINGERPRINTS ([[Dedup.windowHashes]]), so the
+    * heavy shuffle carries 8 bytes per window instead of a `window`-token
+    * string.
+    *
+    * Collision bound: the output equals the window-string count unless two
+    * distinct windows share a fingerprint. For W distinct windows
+    * corpus-wide the expected number of colliding pairs is ≈ W²/2⁶⁵
+    * (~3·10⁻⁸ at W = 10⁶); a collision can only mark a unique window as
+    * duplicated (over-count n_dup_windows). The DuckDB oracle compares
+    * window strings, and the gate matches it at sf0.01 and sf0.1. */
+  def dupWindowCoverage(documents: DataFrame, window: Int): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
-    val g = documents.select(col("doc_id"), explode(windowsCol).as("g"))
+    val g = documents.select(col("doc_id"),
+      explode(Dedup.windowHashes(window)(Dedup.toksC(col("text")))).as("g"))
     val cnt = g.groupBy("g").agg(count(lit(1)).as("c"))
     val per = g.join(cnt, "g").groupBy("doc_id").agg(
       count(lit(1)).as("n_windows"),
@@ -317,36 +307,18 @@ object TextOps {
     * skew-split absorbs stopword-bigram heat) + one hash-agg by doc_id. The
     * corpus total T rides a single-row broadcast. No self-joins, no
     * driver-side state; shuffle volume ≈ token count, the same volume the
-    * tokenize pass already moves. At 100 TB use [[lmScoreFast]] — the same
-    * pipeline over xxhash64 key fingerprints; this string form is the
-    * oracle-exact gate path. */
+    * tokenize pass already moves. The bigram and term join keys are 64-bit
+    * xxhash64 FINGERPRINTS, so the count tables and the scoring shuffle
+    * carry 8-byte longs instead of token text.
+    *
+    * Collision bound: the output equals the string-keyed score unless two
+    * distinct bigrams or two distinct terms share a fingerprint. For V
+    * distinct keys the expected number of colliding pairs is ≈ V²/2⁶⁵
+    * (~3·10⁻⁸ at V = 10⁶); a colliding key can only borrow the other key's
+    * count, which perturbs p_micro/hit_frac/oov_frac but never n_bigrams.
+    * The DuckDB oracle compares strings, and the gate matches it at sf0.01
+    * and sf0.1. */
   def lmScore(train: DataFrame, documents: DataFrame): DataFrame = {
-    val bigrams = Dedup.windowStrings(2)(Dedup.toksC(col("text")))
-    val trainToks = train.select(explode(Dedup.toksC(col("text"))).as("term"))
-    val c1 = trainToks.groupBy("term").agg(count(lit(1)).as("c1"))
-    val c2 = train.select(explode(bigrams).as("big"))
-      .groupBy("big").agg(count(lit(1)).as("c2"))
-    val total = trainToks.agg(count(lit(1)).as("t_total")) // 1 row
-
-    val big = documents
-      .select(col("doc_id"), explode(bigrams).as("big"))
-      // tokens are [a-z0-9]+, so the bigram string has exactly one space
-      .withColumn("prev", substring_index(col("big"), " ", 1))
-      .withColumn("cur", substring_index(col("big"), " ", -1))
-      .join(c2, Seq("big"), "left")
-    scoreBigrams(documents, big,
-      c1.toDF("prev", "c1p"), c1.toDF("cur", "c1c"), total)
-  }
-
-  /** [[lmScore]] over xxhash64 FINGERPRINTS of the bigram and term join
-    * keys instead of their strings — the 100 TB form (the count tables and
-    * the scoring shuffle carry 8-byte longs instead of token text), the
-    * same trade as [[Dedup.decontaminateFast]] / [[dupWindowCoverageFast]]:
-    * identical output up to 64-bit collisions (a colliding bigram/term can
-    * only borrow the other's count; expected colliding key pairs ≈ V²/2⁶⁵
-    * for V distinct keys). The gate keeps the string form so the DuckDB
-    * oracle compares exact text; OpsSpec asserts row-for-row parity. */
-  def lmScoreFast(train: DataFrame, documents: DataFrame): DataFrame = {
     val toks = Dedup.toksC(col("text"))
     val trainTerms = train.select(explode(toks).as("term"))
       .select(xxhash64(col("term")).as("term"))
@@ -359,34 +331,16 @@ object TextOps {
       .select(col("doc_id"), col("x._1").as("big"),
         col("x._2").as("prev"), col("x._3").as("cur"))
       .join(c2, Seq("big"), "left")
-    scoreBigrams(documents, big,
-      c1.toDF("prev", "c1p"), c1.toDF("cur", "c1c"), total)
-  }
-
-  /** The key-type-agnostic scoring tail shared by [[lmScore]] (string keys)
-    * and [[lmScoreFast]] (fingerprint keys): `big` carries one row per
-    * bigram position (doc_id, prev, cur, c2-or-null); c1p/c1c are the
-    * unigram count table keyed as (prev, c1p) / (cur, c1c). */
-  private def scoreBigrams(documents: DataFrame, big: DataFrame,
-                           c1p: DataFrame, c1c: DataFrame,
-                           total: DataFrame): DataFrame = {
     // ONE pass over the bigram rows: both count tables left-join onto `big`
-    // once and the three-way branch is a when() chain. The previous shape
-    // split hits (c2 not null) and misses (c2 null) into two branches of a
-    // union, so the heaviest subtree — the documents scan, the bigram
-    // explode and the c2 join — executed TWICE (round-5 ADVICE). Branch
-    // semantics are unchanged on the string path (a train bigram implies
-    // prev is in the train vocab, so `c2 != null ⇒ c1p != null` and the
-    // first branch is exactly the old hits inner join). On the fingerprint
-    // path ([[lmScoreFast]]) a 64-bit collision where a scored bigram's
-    // fingerprint matches a train bigram while prev is absent from the
-    // train vocab now falls through to the BACKOFF branch instead of
-    // silently dropping the row (shrinking n_bigrams) — collisions can
-    // only perturb p_micro, never row counts (the other round-5 ADVICE
-    // item on this function).
+    // once and the three-way branch is a when() chain, so the heaviest
+    // subtree — the documents scan, the bigram explode and the c2 join —
+    // executes once. Without collisions a train bigram implies prev is in
+    // the train vocab (`c2 != null ⇒ c1p != null`); a collision that breaks
+    // this falls through to the BACKOFF branch instead of dropping the row,
+    // so collisions never change n_bigrams.
     val per = big
-      .join(c1p, Seq("prev"), "left")
-      .join(c1c, Seq("cur"), "left")
+      .join(c1.toDF("prev", "c1p"), Seq("prev"), "left")
+      .join(c1.toDF("cur", "c1c"), Seq("cur"), "left")
       .crossJoin(broadcast(total))
       .select(col("doc_id"),
         when(col("c2").isNotNull && col("c1p").isNotNull,

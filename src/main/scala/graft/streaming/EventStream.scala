@@ -78,25 +78,13 @@ object EventStream {
     new java.io.File(src).mkdirs()
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
-    // deterministic chronological split at the middle DISTINCT HOUR — a few
-    // collected rows, where a row_number split needed a single-partition
-    // global sort of the whole table (the gate-harness hotspot at sf0.1)
-    val hours = ev.select(date_trunc("hour", col("ts")).as("h"))
-      .distinct().orderBy("h").collect().map(_.getTimestamp(0))
-    if (hours.isEmpty) // schema-stable empty result for an empty events table
+    val stage = s"$base/stage"
+    if (!stageBatches(ev, stage)) // schema-stable empty result for an empty events table
       return spark.range(0).select(lit("").as("hour"), lit("").as("event_type"),
         lit(0L).as("n"), lit(0.0).as("sum_value"))
-    val boundary = hours(hours.length / 2)
-    // BOTH batches staged in ONE partitioned write (a per-batch write ran
-    // the events scan twice — guide §2.4, one pass instead of two); the
-    // partitionBy flag column is layout-only and is not written into the
-    // parquet schema. Files still land in the SOURCE dir one batch at a
-    // time, only while NO query is running (see below), so the non-atomic
-    // multi-file move cannot be half-read.
-    val stage = s"$base/stage"
-    ev.withColumn("b",
-        when(col("ts") < lit(boundary), "b1").otherwise("b2"))
-      .write.mode("overwrite").partitionBy("b").parquet(stage)
+    // Files land in the SOURCE dir one batch at a time, only while NO query
+    // is running (see below), so the non-atomic multi-file move cannot be
+    // half-read.
     def landBatch(name: String): Unit = {
       val dir = new java.io.File(s"$stage/b=$name")
       Option(dir.listFiles()).getOrElse(Array.empty)
@@ -127,6 +115,27 @@ object EventStream {
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
     spark.read.schema("hour STRING, event_type STRING, n BIGINT, sum_value DOUBLE")
       .parquet(out).orderBy("hour", "event_type")
+  }
+
+  /** Stages `ev` as two chronological batches for [[hourlyAppendGate]]:
+    * `stage/b=b1` holds ts < boundary and `stage/b=b2` holds ts >= boundary,
+    * where boundary is the middle DISTINCT HOUR (a few collected rows — a
+    * row_number split needed a single-partition global sort of the whole
+    * table, the gate-harness hotspot at sf0.1). BOTH batches are written in
+    * ONE partitioned write (a per-batch write ran the events scan twice);
+    * the partitionBy flag column is layout-only and is not written into the
+    * parquet schema. A row with a null ts has no event time, so it belongs
+    * to neither batch and is dropped. Returns false, writing nothing, when
+    * no row has a ts. */
+  private[graft] def stageBatches(ev: DataFrame, stage: String): Boolean = {
+    val timed = ev.filter(col("ts").isNotNull)
+    val hours = timed.select(date_trunc("hour", col("ts")).as("h"))
+      .distinct().orderBy("h").collect().map(_.getTimestamp(0))
+    if (hours.isEmpty) return false
+    val boundary = hours(hours.length / 2)
+    timed.withColumn("b", when(col("ts") < lit(boundary), "b1").otherwise("b2"))
+      .write.mode("overwrite").partitionBy("b").parquet(stage)
+    true
   }
 
   /** Production shape — the reference's size/lateness flush (T2/T3,

@@ -37,28 +37,21 @@ object OpsScale {
     t("dedup_simhash_near_wide")(Dedup.simhashPairsWide(docs, 3).count())
     t("dedup_minhash_lsh")(Dedup.minhashLsh(docs, 0.95).count())
     t("dedup_ngram_lsh")(Dedup.ngramMinhashLsh(docs, 3, 0.8).count())
-    t("dedup_ngram_lsh_fast")(Dedup.ngramMinhashLshFast(docs, 3, 0.8).count())
     t("dedup_jaccard_prefix")(Dedup.jaccardPairsPrefix(docs, 0.95).count())
     t("text_dup_windows")(graft.ops.TextOps.dupWindowCoverage(docs, 10)
-      .agg(sum("n_dup_windows")).collect()(0).getLong(0))
-    t("text_dup_windows_fast")(graft.ops.TextOps.dupWindowCoverageFast(docs, 10)
       .agg(sum("n_dup_windows")).collect()(0).getLong(0))
     // LM score: reference slice = 30% of the corpus (the gate's split law)
     t("text_lm_score")(graft.ops.TextOps
       .lmScore(docs.where(col("doc_id") % 10 < 3), docs)
       .agg(sum("n_bigrams")).collect()(0).getLong(0))
-    t("text_lm_score_fast")(graft.ops.TextOps
-      .lmScoreFast(docs.where(col("doc_id") % 10 < 3), docs)
-      .agg(sum("n_bigrams")).collect()(0).getLong(0))
     t("dedup_keepers")(Dedup.keepers(docs, 0.95).count())
     if (wanted("dedup_keepers"))
       println(s"[opsscale] keepers component iterations=${Dedup.lastComponentsIters}")
     // decontamination: n-doc training side vs a 10k-doc benchmark carved
-    // from the same corpus (planted overlap); fast = xxhash64 fingerprints
+    // from the same corpus (planted overlap)
     val bench = SynthCorpus.docs(spark, 0, 10000, SynthCorpus.heapsVocab(n))
       .select((col("doc_id") + n).as("doc_id"), col("text"))
-    t("decontam_string")(Dedup.decontaminate(docs, bench, 5).count())
-    t("decontam_fast")(Dedup.decontaminateFast(docs, bench, 5).count())
+    t("decontam")(Dedup.decontaminate(docs, bench, 5).count())
 
     if (!wanted("ivf")) { spark.stop(); return }
     // ---- IVF at scale: n vectors, k = 512 (≈ sqrt-n sizing), Lloyd x2 ----

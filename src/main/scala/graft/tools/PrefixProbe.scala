@@ -24,8 +24,7 @@ object PrefixProbe {
     }
 
     // candidate volume (the piece count() now materializes up front)
-    val sets = docs.select(col("doc_id"),
-      array_sort(array_distinct(Dedup.toks(col("text")))).as("ts"))
+    val sets = docs.select(col("doc_id"), Dedup.tokenSetC(col("text")).as("ts"))
       .filter(size(col("ts")) > 0)
     val groups = sets.groupBy("ts")
       .agg(sort_array(collect_list(col("doc_id"))).as("members"))

@@ -30,13 +30,13 @@ object Probe {
     time("gen_map")(texts.turns(spark, 1000000, cpus).agg(count(lit(1))).collect())
     time("regex_tokens") {
       texts.turns(spark, 400000, cpus).toDF()
-        .select(explode(graft.analyze.TextAnalyzer.tokensCol(col("text"))).as("t"))
+        .select(explode(graft.analyze.TextAnalyzer.tokensUdf(col("text"))).as("t"))
         .agg(count(lit(1))).collect()
     }
     (1 to 3).foreach { i =>
       time(s"shuffle_agg_$i") {
         texts.turns(spark, 400000, cpus).toDF()
-          .select(explode(graft.analyze.TextAnalyzer.tokensCol(col("text"))).as("t"))
+          .select(explode(graft.analyze.TextAnalyzer.tokensUdf(col("text"))).as("t"))
           .groupBy("t").count().agg(sum("count")).collect()
       }
     }

@@ -29,9 +29,11 @@ class AnalyzerSpec extends SparkFunSuite {
   test("keyword analyzer scala/Column parity") {
     val vals = Seq("", "  ", "Grep", " READ_file ", "tool-7", null, "a")
     val df = vals.toDF("v")
-    val viaCol = df.select(KeywordAnalyzer.tokensCol(col("v")).as("toks"))
+    // null/blank values must give an empty array, never null: the build
+    // sizes this column for the norms dl
+    val viaCol = df.select(KeywordAnalyzer.tokensUdf(col("v")).as("toks"))
       .collect().map { r =>
-        assert(!r.isNullAt(0), "tokensCol returned NULL — must be empty array")
+        assert(!r.isNullAt(0), "tokensUdf returned NULL — must be empty array")
         r.getSeq[String](0).toList
       }
     vals.zip(viaCol).foreach { case (v, colToks) =>

@@ -1,7 +1,7 @@
 package graft
 
 import scala.util.Random
-import graft.build.{DocIds, PostingAgg, OccRow}
+import graft.build.{DocIds, IndexBuilder, IndexConfig, PostingAgg, OccRow}
 import graft.gen.TranscriptGen
 
 class BuildSpec extends SparkFunSuite {
@@ -49,5 +49,22 @@ class BuildSpec extends SparkFunSuite {
     val merged = bufs.reduce(PostingAgg.merge)
     val out = PostingAgg.finish(merged)
     assert(out.docIds.toSeq == (0L until 100L))
+  }
+
+  test("every build records its phase wall times as phasesMs in the core manifest") {
+    val dir = SparkSpec.tmpDir("graft-phases")
+    val m = IndexBuilder.build(spark, TranscriptGen.turns(spark, 200, 4).toDF(), dir,
+      IndexConfig(buckets = 4, chunkDocs = 64, bucketGroups = 2))
+    val json = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/_manifest/core.json")), "UTF-8")
+    val phases = """"phasesMs":\{([^}]*)\}""".r.findFirstMatchIn(json)
+      .map(_.group(1)).getOrElse(fail(s"no phasesMs object in $json"))
+    val keys = """"(\w+)":\d+""".r.findAllMatchIn(phases).map(_.group(1)).toSeq
+    assert(keys == Seq("docids", "docstore", "norms", "avgdl",
+      "postings_g0", "termstats_g0", "postings_g1", "termstats_g1"))
+    // the additive object does not leak into the parsed layout fields
+    val read = IndexBuilder.readManifest(spark, dir)
+    assert(read == m)
+    assert(read.avgdl.keySet == IndexBuilder.Fields.toSet)
   }
 }

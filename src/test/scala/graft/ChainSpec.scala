@@ -59,7 +59,7 @@ class ChainSpec extends SparkFunSuite {
     assert(CjkBigramAnalyzer.tokens(null).isEmpty)
     // scala/Column parity (udf form)
     val viaCol = Seq("mix 中文 end").toDF("t")
-      .select(CjkBigramAnalyzer.tokensCol(col("t"))).collect()(0).getSeq[String](0)
+      .select(CjkBigramAnalyzer.tokensUdf(col("t"))).collect()(0).getSeq[String](0)
     assert(viaCol == CjkBigramAnalyzer.tokens("mix 中文 end"))
   }
 

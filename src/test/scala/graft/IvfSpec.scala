@@ -107,6 +107,15 @@ class IvfSpec extends SparkFunSuite {
     assert(hits.map(_.getLong(0)).contains(5L)) // its own cluster is probed
   }
 
+  test("loadCentroids on an index without the binary sidecar names the path and says rebuild") {
+    // the older layout kept the quantizer as a parquet dir `$dir-centroids`
+    val d = SparkSpec.tmpDir("graft-ivf-legacy")
+    emb.limit(4).write.parquet(s"$d-centroids")
+    val e = intercept[IllegalStateException](IvfIndex.loadCentroids(spark, d))
+    assert(e.getMessage.contains(s"$d-centroids.bin"))
+    assert(e.getMessage.contains("rebuild"))
+  }
+
   test("IVF recall@10 >= scanned coverage (isotropic-vector floor, like AnnIndexSpec)") {
     val total = emb.count().toDouble
     val qs = emb.filter(col("vec_id") < 5).collect()

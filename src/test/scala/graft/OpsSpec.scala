@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.analyze.TextAnalyzer
 import graft.ops.{Dedup, Multimodal, Similarity, TextOps, Transcripts}
 
 /** Local assertions for the training-data ops (the driver gate additionally
@@ -93,15 +94,6 @@ class OpsSpec extends SparkFunSuite {
     pairList.foreach { case (a, b) => assert(kmap(a) == kmap(b)) }
   }
 
-  test("decontaminateFast == decontaminate (fingerprint vs string shingles)") {
-    val bench = docs.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    val s = Dedup.decontaminate(docs, bench, 3).collect().map(_.toSeq).toSeq
-    val f = Dedup.decontaminateFast(docs, bench, 3).collect().map(_.toSeq).toSeq
-    assert(s == f)
-    assert(s.exists(r => r(2) == true)) // the planted overlap is detected
-  }
-
   test("brute-force cosine top-k is ordered and self-consistent") {
     val top = Similarity.cosineTopK(spark, sf, 0, 10).collect()
     assert(top.length == 10)
@@ -170,8 +162,7 @@ class OpsSpec extends SparkFunSuite {
     // sqrt rule: B(B+1)/2 pair-groups hold ~TargetRowsPerBlock candidates
     assert(routingBlocksFor(100L * 100L * TargetRowsPerBlock / 2) == 100)
     assert(routingBlocksFor(Long.MaxValue) == MaxPairBlocks)
-    val sets = docs.select(col("doc_id"),
-      array_sort(array_distinct(Dedup.toks(col("text")))).as("ts"))
+    val sets = docs.select(col("doc_id"), Dedup.tokenSetC(col("text")).as("ts"))
       .filter(size(col("ts")) > 0)
     val groups = sets.groupBy("ts")
       .agg(sort_array(collect_list(col("doc_id"))).as("members"))
@@ -193,9 +184,9 @@ class OpsSpec extends SparkFunSuite {
     def vals(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
     val compiled = d.select(col("doc_id"),
-      Dedup.shingleHashes(3)(Dedup.toks(col("text"))).as("ts"))
+      Dedup.shingleHashes(3)(Dedup.toksC(col("text"))).as("ts"))
     val declarative = d.select(col("doc_id"),
-      array_sort(array_distinct(transform(Dedup.shingles(Dedup.toks(col("text")), 3),
+      array_sort(array_distinct(transform(Dedup.shingles(TextAnalyzer.tokensCol(col("text")), 3),
         s => xxhash64(s)))).as("ts"))
     val got = vals(compiled)
     assert(got == vals(declarative))
@@ -242,16 +233,6 @@ class OpsSpec extends SparkFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lshSf.subsetOf(exact))
     assert(exact.isEmpty || lshSf.size.toDouble / exact.size >= 0.8)
-    // fingerprinted fast path: same pipeline over xxhash64 fingerprints; the
-    // verify is exact up to 64-bit collisions, so no-false-positives and the
-    // recall floor hold the same way (candidates differ only via hash family)
-    val fast = Dedup.ngramMinhashLshFast(d, 3, 0.8).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(fast.toSeq == Seq((1L, 3L, 1.0)))
-    val fastSf = Dedup.ngramMinhashLshFast(docs, 3, 0.8).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(fastSf.subsetOf(exact))
-    assert(exact.isEmpty || fastSf.size.toDouble / exact.size >= 0.8)
     // B-invariance holds for the shingle member too
     def sig(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
     assert(sig(Dedup.ngramJaccardPairs(docs, 3, 0.8, Some(2))) ==
@@ -392,7 +373,7 @@ class OpsSpec extends SparkFunSuite {
     val stages = Seq(
       "min_chars" -> (length(col("text")) >= 50),
       "lang" -> col("lang").isin("en", "de"),
-      "min_tokens" -> (size(Dedup.toks(col("text"))) >= 10))
+      "min_tokens" -> (size(Dedup.toksC(col("text"))) >= 10))
     val f = Curate.funnel(docs, stages).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(f.map(_._2).toSeq == Seq("min_chars", "lang", "min_tokens"))
@@ -495,32 +476,15 @@ class OpsSpec extends SparkFunSuite {
       .toDF("doc_id", "text")
     val d = docs.select("doc_id", "text").unionAll(crafted)
     val w = 10
-    val got = TextOps.dupWindowCoverage(d, w).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    // brute force: global window counts, then per-doc coverage
-    val allWins = d.collect().map { row =>
-      val toks = graft.analyze.TextAnalyzer.tokens(row.getString(1)).toSeq
-      row.getLong(0) -> toks.sliding(w).filter(_.length == w).map(_.mkString(" ")).toSeq
-    }
-    val global = allWins.flatMap(_._2).groupBy(identity).map { case (k, v) => k -> v.size }
-    allWins.foreach { case (id, wins) =>
-      val nd = wins.count(global(_) > 1).toLong
-      val exp = (wins.size.toLong, nd,
-        if (wins.nonEmpty) r6(nd.toDouble / wins.size) else 0.0)
-      assert(got(id) == exp, s"doc $id")
-    }
+    val got = BruteForce.dupWindowsOf(TextOps.dupWindowCoverage(d, w))
+    val expected = BruteForce.dupWindows(BruteForce.rows(d), w)
+    expected.foreach { case (id, exp) => assert(got(id) == exp, s"doc $id") }
     // the planted laws hold literally: the 12-token shared span yields 3
     // common 10-windows; each host doc also has windows straddling its own
     // prefix/suffix, which are unique
     assert(got(9101L)._2 == 3L && got(9102L)._2 == 3L)
     assert(got(9103L)._1 > 0 && got(9103L)._3 == 1.0) // pure loop: all dup
     assert(got(9104L) == ((0L, 0L, 0.0)))
-
-    // the fingerprinted 100 TB form returns the identical coverage table
-    val fast = TextOps.dupWindowCoverageFast(d, w).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    assert(fast == got)
   }
 
   test("repetitionSignals: brute-force parity on corpus + crafted edges") {
@@ -572,36 +536,11 @@ class OpsSpec extends SparkFunSuite {
       .toDF("doc_id", "text")
     val d = docs.select("doc_id", "text").unionAll(crafted)
     val train = d.where(col("doc_id") % 10 < 3)
-    val got = TextOps.lmScore(train, d).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))).toMap
-    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val got = BruteForce.lmScoresOf(TextOps.lmScore(train, d))
     // brute force: count-based Stupid-Backoff bigram LM over the same tokens
-    val all = d.collect().map(row =>
-      row.getLong(0) -> graft.analyze.TextAnalyzer.tokens(row.getString(1)).toSeq)
-    val trainSeqs = all.filter(_._1 % 10 < 3)
-    val c1 = trainSeqs.flatMap(_._2).groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-    val c2 = trainSeqs.flatMap(_._2.sliding(2).filter(_.length == 2).map(_.mkString(" ")))
-      .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-    val tTot = trainSeqs.map(_._2.length.toLong).sum
-    all.foreach { case (id, toks) =>
-      val bigs = toks.sliding(2).filter(_.length == 2).toSeq
-      val n = bigs.size.toLong
-      if (n == 0) assert(got(id) == ((0L, 0.0, 0.0, 0L)), s"doc $id")
-      else {
-        var nh = 0L; var no = 0L; var sp = 0L
-        bigs.foreach { bg =>
-          c2.get(bg.mkString(" ")) match {
-            case Some(cb) => nh += 1; sp += math.round(1000000.0 * cb / c1(bg.head))
-            case None => c1.get(bg(1)) match {
-              case Some(cc) => sp += math.round(400000.0 * cc / tTot)
-              case None => no += 1
-            }
-          }
-        }
-        assert(got(id) == ((n, r6(nh.toDouble / n), r6(no.toDouble / n),
-          math.round(sp.toDouble / n))), s"doc $id")
-      }
-    }
+    val all = BruteForce.rows(d)
+    val expected = BruteForce.lmScores(all.filter(_._1 % 10 < 3), all)
+    expected.foreach { case (id, exp) => assert(got(id) == exp, s"doc $id") }
     // the crafted laws hold literally
     assert(got(9209L) == ((3L, 1.0, 0.0, 1000000L))) // reference knows every step
     assert(got(9217L) == ((2L, 0.0, 1.0, 0L))) // reference never saw any token
@@ -609,12 +548,6 @@ class OpsSpec extends SparkFunSuite {
     // corpus sanity: the reference slice is 30% of same-generator docs, so
     // scored docs should mostly be predictable (some hits somewhere)
     assert(got.values.map(_._2).sum > 0)
-
-    // fingerprinted fast path: identical output row-for-row (same corpus +
-    // crafted edges — the collision odds at this vocab are ~V²/2⁶⁵ ≈ 0)
-    val fast = TextOps.lmScoreFast(train, d).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))).toMap
-    assert(fast == got)
   }
 
   test("documents->transcripts derivation: rank order == doc_id (docId invariant)") {
@@ -634,22 +567,28 @@ class OpsSpec extends SparkFunSuite {
       (9993L, "A b CC d1 " + "x" * 41 + " ok 0x00 42 ZZZ___mix-9"),
       (9994L, "ONE one One оне 中文 one1")).toDF("doc_id", "text")
     val both = docs.select(col("doc_id"), col("text")).unionAll(edge)
-    both.select(
-        Dedup.toks(col("text")).as("a"), Dedup.toksC(col("text")).as("b"),
-        array_sort(array_distinct(Dedup.toks(col("text")))).as("c"),
+    // the declarative column maps null text to an empty array; the compiled
+    // UDFs keep null for null text and agree on every other row
+    both.select(col("text").isNull.as("n"),
+        TextAnalyzer.tokensCol(col("text")).as("a"), Dedup.toksC(col("text")).as("b"),
+        array_sort(array_distinct(TextAnalyzer.tokensCol(col("text")))).as("c"),
         Dedup.tokenSetC(col("text")).as("d"))
       .collect().foreach { r =>
-        assert(r.isNullAt(0) == r.isNullAt(1))
-        if (!r.isNullAt(0)) assert(r.getSeq[String](0) == r.getSeq[String](1))
-        assert(r.isNullAt(2) == r.isNullAt(3))
-        if (!r.isNullAt(2)) assert(r.getSeq[String](2) == r.getSeq[String](3))
+        assert(!r.isNullAt(1) && !r.isNullAt(3))
+        if (r.getBoolean(0)) {
+          assert(r.getSeq[String](1).isEmpty && r.isNullAt(2))
+          assert(r.getSeq[String](3).isEmpty && r.isNullAt(4))
+        } else {
+          assert(r.getSeq[String](1) == r.getSeq[String](2))
+          assert(r.getSeq[String](3) == r.getSeq[String](4))
+        }
       }
   }
 
   test("simhashSigs compiled kernel == the declarative explode pipeline (32/60-bit)") {
     import org.apache.spark.sql.Column
     def declarative(bits: Int, h: Column => Column) = docs
-      .select(col("doc_id"), explode(Dedup.toks(col("text"))).as("term"))
+      .select(col("doc_id"), explode(TextAnalyzer.tokensCol(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       .withColumn("h", h(col("term")))
       .select(col("doc_id"), col("tf"), col("h"),

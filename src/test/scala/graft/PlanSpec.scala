@@ -178,13 +178,13 @@ class PlanSpec extends SparkFunSuite {
   test("curate funnel is ONE aggregation pass over one scan") {
     val df = graft.ops.Curate.funnel(sfDocs, Seq(
       "min_chars" -> (length(col("text")) >= 50),
-      "min_tokens" -> (size(graft.ops.Dedup.toks(col("text"))) >= 10)))
+      "min_tokens" -> (size(graft.ops.Dedup.toksC(col("text"))) >= 10)))
     // funnel() collects internally; the report frame is driver-local rows.
     // Assert the SCAN count through the aggregation: build the flagged+agg
     // plan the same way and count scans/aggregates
     val flagged = sfDocs.select(
       (length(col("text")) >= 50).as("_c0"),
-      (size(graft.ops.Dedup.toks(col("text"))) >= 10).as("_c1"))
+      (size(graft.ops.Dedup.toksC(col("text"))) >= 10).as("_c1"))
     val agg = flagged.select((col("_c0")).as("_s0"), (col("_c0") && col("_c1")).as("_s1"))
       .agg(count(lit(1)), sum(when(col("_s0"), 1L)), sum(when(col("_s1"), 1L)))
     agg.collect()

@@ -64,4 +64,20 @@ class StreamAppendSpec extends SparkFunSuite {
       assert(after3.contains(("2026-01-01 03:00:00", "view", 1L, 5.0)))
     } finally q.stop()
   }
+
+  test("gate staging drops null-ts events instead of routing them to batch b2") {
+    val stage = SparkSpec.tmpDir("stream-stage") + "/stage"
+    val ev = Seq(
+      (1L, "2026-01-01 00:05:00"), (2L, "2026-01-01 01:05:00"),
+      (3L, "2026-01-01 02:05:00"), (4L, null))
+      .toDF("event_id", "tss")
+      .select(col("event_id"), col("tss").cast("timestamp").as("ts"),
+        lit(1L).as("user_id"), lit("click").as("event_type"), lit(1.0).as("value"),
+        lit("{}").as("props"))
+    assert(EventStream.stageBatches(ev, stage))
+    // boundary = middle distinct hour (01:00): b1 = {1}, b2 = {2, 3}
+    val staged = spark.read.parquet(stage).select("event_id", "b").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(staged == Map(1L -> "b1", 2L -> "b2", 3L -> "b2"))
+  }
 }
