@@ -10,10 +10,13 @@ import graft.codec.PostingCodec
 /** A parsed search: ordered unique (field, term) pairs ANDed together —
   * the reference's `keywords{field: "tok1\ttok2..."}` request surface
   * (service/searcher/module/poseidon.go:61-106, docs/get_started.md:139-158)
-  * — plus top-k size. Scoring sums per-term BM25 contributions in the pairs'
-  * order (FP-stable vs the oracle).
+  * — plus top-k size `k >= 0` (`k = 0` is a legal, empty top-k). Scoring
+  * sums per-term BM25 contributions in the pairs' order (FP-stable vs the
+  * oracle).
   */
-final case class SearchQuery(terms: Seq[(String, String)], k: Int)
+final case class SearchQuery(terms: Seq[(String, String)], k: Int) {
+  require(k >= 0, s"SearchQuery k must be >= 0, got k=$k")
+}
 
 object SearchQuery {
   /** Build from a field->tokens map. Each keyword is run through the field's
@@ -54,11 +57,12 @@ final case class SearchStats(total: Long, pv: Long, uv: Long)
   *     -> shuffle by chunk (only the query terms' postings move)   } job 2
   *     -> per-chunk conjunctive DAAT + block-max skip -> local k  /
   *     -> global top-k (TakeOrderedAndProject tree-reduce)
-  *   docstore fetch: docId IN (hits) pushdown + broadcast join    — job 3
+  *   docstore fetch: docId IN (collected hits) pushdown + score    — job 3
+  *     looked up from the collected pairs; one scan, no exchange
   *
   * Replaces the reference's searcher/meta/hdfsreader HTTP fan-out
   * (inverted_index_gz_client.go:152-202, doc_gz_client.go:118-232) with
-  * exactly two exchanges.
+  * at most two exchanges (one in the serving fast path, none in the fetch).
   */
 class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable {
 
@@ -215,10 +219,16 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
 
   /** Paged ranked hits — the reference's pagination (O4,
     * module/poseidon.go:134-143 slices [page*size, ...) of the ordered id
-    * list; here the slice applies to the BM25 ranking). */
+    * list; here the slice applies to the BM25 ranking). Requires
+    * `pageNumber >= 0`, `pageSize > 0` and `(pageNumber + 1) * pageSize` to
+    * fit an Int. */
   def topKPage(q: SearchQuery, pageNumber: Int, pageSize: Int): DataFrame = {
-    val upto = (pageNumber + 1) * pageSize
-    topK(q.copy(k = upto)).offset(pageNumber * pageSize)
+    require(pageNumber >= 0, s"topKPage pageNumber must be >= 0, got pageNumber=$pageNumber")
+    require(pageSize > 0, s"topKPage pageSize must be > 0, got pageSize=$pageSize")
+    val upto = (pageNumber + 1).toLong * pageSize
+    require(upto <= Int.MaxValue,
+      s"topKPage (pageNumber + 1) * pageSize must fit an Int, got pageNumber=$pageNumber pageSize=$pageSize")
+    topK(q.copy(k = upto.toInt)).offset(pageNumber * pageSize)
   }
 
   /** Reference stats semantics. */
@@ -235,21 +245,27 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
   }
 
   /** Top-k joined back to the docstore — the J3 hits×docstore join
-    * (doc_gz_client.go:171-232); `text` returned verbatim (per-turn text
-    * equality invariant). */
+    * (doc_gz_client.go:171-232): each hit's stored row is read once, after
+    * ranking. The ranking runs once, in the collect of [[topK]]; the docstore
+    * query then carries the collected (docId, score) pairs as driver-local
+    * data — a `docId IN (ids)` parquet pushdown plus a per-row score lookup
+    * from a map literal — and plans as one scan under TakeOrderedAndProject
+    * (no exchange, no broadcast, no second ranking). Scores are the collected
+    * doubles, so they equal topK's bit for bit. Output columns: `docId`, the
+    * other docstore columns, `score`; `text` is returned verbatim (per-turn
+    * text equality invariant). */
   def fetch(q: SearchQuery): DataFrame = {
-    val hits = topK(q)
-    val rows = hits.collect() // k rows only
-    if (rows.isEmpty) // schema-stable empty result: same COLUMN ORDER as the
-      // join path below (join on Seq("docId") moves docId first)
-      return docstore.limit(0).withColumn("score", lit(0.0))
-        .select((col("docId") +: docstore.columns.filterNot(_ == "docId").map(col)
-          :+ col("score")): _*)
-    val ids = rows.map(_.getLong(0))
+    val rows = topK(q).collect() // k rows only
+    val cols = col("docId") +: docstore.columns.filterNot(_ == "docId").map(col) :+ col("score")
+    if (rows.isEmpty) // schema-stable empty result, same column order
+      return docstore.limit(0).withColumn("score", lit(0.0)).select(cols: _*)
+    val scoreOf = rows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
     docstore
-      .filter(col("docId").isin(ids: _*)) // parquet min/max pruning (sorted col)
-      .join(broadcast(hits), Seq("docId"))
+      .filter(col("docId").isin(scoreOf.keys.toSeq: _*)) // parquet min/max pruning (sorted col)
+      .withColumn("score", element_at(typedLit(scoreOf), col("docId")))
+      .select(cols: _*)
       .orderBy(desc("score"), asc("docId"))
+      .limit(rows.length)
   }
 
   /** Result post-filter — the reference's `req.filter` surface

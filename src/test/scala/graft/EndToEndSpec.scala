@@ -135,6 +135,58 @@ class EndToEndSpec extends SparkFunSuite {
     }
   }
 
+  test("fetch == topK: (docId, score) in row order, bit for bit, on both norms paths") {
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = df.collect().toSeq.map(r =>
+      (r.getLong(r.fieldIndex("docId")), java.lang.Double.doubleToRawLongBits(r.getDouble(r.fieldIndex("score")))))
+    def check(e: QueryEngine, path: String): Unit = queries.foreach { case (name, q) =>
+      assert(pairs(e.fetch(q)) == pairs(e.topK(q)), s"$path $name: fetch != topK")
+    }
+    check(engine, "cached norms")
+    val prop = "graft.norms.cache.max.bytes"
+    sys.props(prop) = "0"
+    try check(new QueryEngine(spark, indexDir), "distributed norms")
+    finally sys.props.remove(prop)
+  }
+
+  test("empty fetch (absent term, k = 0) has the non-empty fetch's columns and types") {
+    def shape(df: org.apache.spark.sql.DataFrame) = df.schema.fields.toSeq.map(f => (f.name, f.dataType))
+    val full = engine.fetch(queries(0)._2)
+    assert(full.collect().nonEmpty)
+    val absent = engine.fetch(queries.toMap.apply("q08_absent"))
+    val k0 = engine.fetch(queries(0)._2.copy(k = 0))
+    Seq("absent term" -> absent, "k = 0" -> k0).foreach { case (name, df) =>
+      assert(df.collect().isEmpty, name)
+      assert(shape(df) == shape(full), s"$name: ${shape(df)} != ${shape(full)}")
+    }
+    assert(shape(full).map(_._1) == ("docId" +: engine.docstore.columns.filterNot(_ == "docId") :+ "score").toSeq)
+  }
+
+  test("SearchQuery requires k >= 0 and names the bad value") {
+    val e = intercept[IllegalArgumentException](SearchQuery(Seq("text" -> "error"), -1))
+    assert(e.getMessage.contains("k=-1"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException](SearchQuery.of(Seq("text" -> Seq("error")), -5))
+    assert(e2.getMessage.contains("k=-5"), e2.getMessage)
+    // k = 0 stays legal: an empty top-k (scoreAll callers build such queries)
+    assert(engine.topK(SearchQuery(Seq("text" -> "error"), 0)).collect().isEmpty)
+  }
+
+  test("topKPage requires pageNumber >= 0 and names the bad value") {
+    val q = SearchQuery.of(Seq("text" -> Seq("error")), 10)
+    val e = intercept[IllegalArgumentException](engine.topKPage(q, -1, 10))
+    assert(e.getMessage.contains("pageNumber=-1"), e.getMessage)
+  }
+
+  test("topKPage requires pageSize > 0 and names the bad value") {
+    val q = SearchQuery.of(Seq("text" -> Seq("error")), 10)
+    Seq(0, -3).foreach { size =>
+      val e = intercept[IllegalArgumentException](engine.topKPage(q, 0, size))
+      assert(e.getMessage.contains(s"pageSize=$size"), e.getMessage)
+    }
+    // a page end past Int.MaxValue is refused, not wrapped to a negative k
+    val e = intercept[IllegalArgumentException](engine.topKPage(q, Int.MaxValue / 2, 4))
+    assert(e.getMessage.contains("pageSize=4"), e.getMessage)
+  }
+
   test("pv/uv stats match reference semantics (single=header, multi=|intersection|)") {
     queries.foreach { case (name, q) =>
       val got = engine.searchStats(q)

@@ -6,8 +6,9 @@ import graft.build.{IndexBuilder, IndexConfig}
 import graft.gen.TranscriptGen
 
 /** Physical-plan assertions — the scale contract (SURVEY.md §4): partition
-  * pruning on the bucket shard column (R1), parquet filter pushdown, and
-  * broadcastability of the hits-side join. These guard against regressions
+  * pruning on the bucket shard column (R1), parquet filter pushdown, and a
+  * docstore fetch that scans the docstore once without re-running the
+  * ranking. These guard against regressions
   * that would silently turn a 40 KB-per-term read into a full index scan at
   * 100 TB. */
 class PlanSpec extends SparkFunSuite {
@@ -46,6 +47,29 @@ class PlanSpec extends SparkFunSuite {
     val plan = executedPlan(df)
     assert(plan.contains("PushedFilters") && plan.contains("In(docId"),
       s"docId filter not pushed in:\n$plan")
+  }
+
+  test("QueryEngine.fetch plans one docstore scan: no postings re-scan, exchange or broadcast") {
+    val q = graft.query.SearchQuery.of(Seq("text" -> Seq("error")), 20)
+    val df = new graft.query.QueryEngine(spark, dir).fetch(q)
+    assert(df.collect().nonEmpty)
+    val executed = df.queryExecution.executedPlan
+    val plan = executedPlan(df)
+    // the hits arrive as collected pairs: the ranking (postings scan, chunk
+    // shuffle, kernel) must not run again inside the fetch's own plan
+    val scans = PlanSpec.collect(executed) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.relation.location.rootPaths.mkString(",")
+    }
+    assert(scans.length == 1 && scans.head.endsWith("docstore"), s"scans $scans in:\n$plan")
+    assert(!plan.contains("postings"), s"postings scan in the fetch plan:\n$plan")
+    assert(plan.contains("PushedFilters") && (plan.contains("In(docId") || plan.contains("InSet(docId")),
+      s"docId filter not pushed in:\n$plan")
+    val exchanges = PlanSpec.collect(executed) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e.nodeName
+      case e: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => e.nodeName
+    }
+    assert(exchanges.isEmpty, s"exchanges $exchanges in:\n$plan")
+    assert(plan.contains("TakeOrderedAndProject"), s"no top-n in:\n$plan")
   }
 
   test("column pruning: projecting (term) reads only needed columns") {
@@ -207,3 +231,6 @@ class PlanSpec extends SparkFunSuite {
       s"range shuffle re-executed downstream of the checkpoint in:\n$plan")
   }
 }
+
+/** Plan traversal that descends into adaptive plans and their query stages. */
+object PlanSpec extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
