@@ -40,14 +40,9 @@ object Sessions {
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", ShufflePartitions.toString)
-      // AQE stays on (Spark's posture for batch jobs; it skew-splits and
-      // right-sizes the big shuffles on a real cluster). SPARK_GRAFT_AQE=0
-      // is a diagnostic knob only: with it off the 1-core scaling leg runs
-      // ~11% faster because AQE's per-stage driver re-planning shares the
-      // bound core with the task thread — on a real cluster the driver is
-      // a separate node, so that cost is not executor-scaling-relevant.
-      .config("spark.sql.adaptive.enabled",
-        (!sys.env.get("SPARK_GRAFT_AQE").contains("0")).toString)
+      // AQE on (Spark's posture for batch jobs; it skew-splits and
+      // right-sizes the big shuffles on a real cluster)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", localDir))
       .config("spark.ui.enabled", "false")

@@ -1,6 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analyze.Analyzers
@@ -60,9 +63,13 @@ final case class SearchStats(total: Long, pv: Long, uv: Long)
   *   docstore fetch: docId IN (collected hits) pushdown + score    — job 3
   *     looked up from the collected pairs; one scan, no exchange
   *
+  * The kernel needs each chunk's doc lengths (the norms sidecar). A small
+  * sidecar is one broadcast map per engine, looked up inside the kernel
+  * task; a large one rides the chunk shuffle (see [[normsLocal]]).
+  *
   * Replaces the reference's searcher/meta/hdfsreader HTTP fan-out
   * (inverted_index_gz_client.go:152-202, doc_gz_client.go:118-232) with
-  * at most two exchanges (one in the serving fast path, none in the fetch).
+  * at most two exchanges (one with broadcast norms, none in the fetch).
   */
 class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable {
 
@@ -85,76 +92,71 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
   // planCache (entries are tiny, but a long-lived engine fed adversarial
   // vocabulary should not grow without limit).
   private val StatsCacheMaxEntries = 1 << 20
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Option[(Long, Long)]]()
+  private val statsCache = new ConcurrentHashMap[(String, String), Option[(Long, Long)]]()
 
   // prepared-plan cache: a repeated interactive query (the dominant serving
   // pattern; the reference fronts its searcher with memcached the same way)
   // reuses the analyzed+planned Dataset — Dataset construction and Catalyst
   // planning are ~40% of the interactive floor (measured 70-110 ms of
   // ~250 ms). Valid because the index is immutable per engine and plans are
-  // deterministic in (terms, k). Entry = one plan tree (KBs — the heavy
-  // norms LocalRelation is SHARED across plans via normsDsCache below, not
-  // re-encoded per entry). Bounded: cleared wholesale at the cap (plans
-  // rebuild in ~10 ms; an LRU would buy nothing at this entry cost).
+  // deterministic in (terms, k). Entry = one plan tree (KBs; the norms it
+  // reads are a broadcast handle, not data). Bounded: cleared wholesale at
+  // the cap (plans rebuild in ~10 ms; an LRU would buy nothing here).
   private val PlanCacheMaxEntries = 1024
-  private val planCache =
-    new java.util.concurrent.ConcurrentHashMap[(Seq[(String, String)], Int), DataFrame]()
+  private val planCache = new ConcurrentHashMap[(Seq[(String, String)], Int), DataFrame]()
 
   // prepared-plan cache for the SCORE-ALL shape (fetchFiltered's candidate
-  // scoring; k-independent), same validity argument and normsGen guard as
-  // planCache. Kept separate so topK's (terms, k) keyspace and this
-  // (terms)-keyed one cannot evict each other at their different rates.
-  private val scoreAllCache =
-    new java.util.concurrent.ConcurrentHashMap[Seq[(String, String)], DataFrame]()
+  // scoring; k-independent), same validity argument as planCache. Kept
+  // separate so topK's (terms, k) keyspace and this (terms)-keyed one
+  // cannot evict each other at their different rates.
+  private val scoreAllCache = new ConcurrentHashMap[Seq[(String, String)], DataFrame]()
 
   // memoized matchCount RESULTS: the index is immutable per engine, so the
   // AND-intersection count is a pure function of the term set — repeated
   // pv/uv stats queries (as interactive as top-k; the reference fronts its
   // stats multiget with memcached the same way) become a map hit instead of
-  // a kernel job. Values are longs — they pin no norms generation, so no
-  // normsGen interplay. Bounded like statsCache.
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[Seq[(String, String)], java.lang.Long]()
+  // a kernel job. Bounded like statsCache.
+  private val countCache = new ConcurrentHashMap[Seq[(String, String)], java.lang.Long]()
 
-  // one encoded norms LocalRelation per queried FIELD SET (not per query):
-  // createDataset eagerly encodes the blobs into the plan's LocalRelation,
-  // so without this every planCache entry would hold its own copy of the
-  // norms sidecar (up to NormsCacheMaxBytes each — a driver-heap leak).
-  // Keyed on the SORTED field list (query order must not mint new entries)
-  // and bounded like the sibling caches — entries are heavy.
-  private val NormsDsCacheMaxEntries = 64
-  private val normsDsCache =
-    new java.util.concurrent.ConcurrentHashMap[Seq[String], DataFrame]()
-  // bumped on every norms-cache clear: an in-flight topK that built its plan
-  // against a since-evicted norms generation must not insert it into
-  // planCache (the plan would pin the stale copy alongside the rebuilt one)
-  private val normsGen = new java.util.concurrent.atomic.AtomicLong()
-  // guards the two short norms-generation critical sections (evict+bump in
-  // normsDs, gen-recheck+insert in topK) so an eviction cannot land BETWEEN
-  // a stale-gen check and the plan insert — without it a plan built against
-  // an evicted norms copy could still enter planCache and pin that copy
-  // (memory retention only, but why carry the race). Never held across a
-  // Spark job — both sections are local map ops.
-  private val cacheLock = new Object
+  /** `cache(key)`, else `build` published with putIfAbsent. The build runs
+    * OUTSIDE the map: it runs a termstats Spark job, and a computeIfAbsent
+    * mapping that long would serialize unrelated keys hashing to the same
+    * bin. A concurrent duplicate build is harmless — the first published
+    * value wins. Cleared wholesale when `max` entries are reached. */
+  private def memo[K, V <: AnyRef](cache: ConcurrentHashMap[K, V], max: Int, key: K)(build: => V): V = {
+    val hit = cache.get(key)
+    if (hit != null) return hit
+    val v = build
+    if (cache.size >= max) cache.clear()
+    val prev = cache.putIfAbsent(key, v)
+    if (prev != null) prev else v
+  }
 
-  /** Serving fast path for the norms sidecar: when it is small (interactive-
-    * scale index), collect it once per engine and inject the query fields'
-    * rows as a LOCAL relation into the chunk shuffle — this removes a second
-    * postings scan, a distinct aggregation (2 exchanges) and a broadcast
-    * join from EVERY query (measured ~80 ms of the ~250 ms interactive
-    * floor). Above the size cap (or on non-local storage) the distributed
-    * semi-join path below keeps the 100 TB shape: norms pruned to chunks
-    * that actually hold postings, shipped through the same shuffle. */
+  /** Serving fast path for the norms sidecar: when it is small
+    * (interactive-scale index), collect it once per engine into one
+    * broadcast (field, chunk) -> blob map. Plans then carry only the
+    * broadcast handle and each kernel task looks up its chunk's rows, so a
+    * query runs no norms scan, semi-join or norms shuffle (the scan and
+    * semi-join were measured ~80 ms of the ~250 ms interactive floor). Above
+    * the size cap (or on non-local storage) [[candidates]] keeps the
+    * distributed 100 TB shape: norms pruned to the chunks that hold
+    * postings, shipped through the chunk shuffle. */
   private val NormsCacheMaxBytes = // sys-prop override so specs cover BOTH paths
     sys.props.get("graft.norms.cache.max.bytes").map(_.toLong).getOrElse(64L << 20)
-  private lazy val normsLocal: Option[Map[String, Seq[(String, String, Long, Array[Byte])]]] = {
+  private lazy val normsLocal: Option[Broadcast[Map[(String, Long), Array[Byte]]]] = {
     val normsDir = new java.io.File(dir, "norms")
     // non-local paths (hdfs:// etc.) fail exists() -> distributed path
     if (!normsDir.exists() || graft.FsUtil.dirSize(normsDir) > NormsCacheMaxBytes) None
-    else Some(norms.select("field", "chunk", "blob").collect()
-      .map(r => (r.getString(0), QueryKernel.NormsTerm, r.getLong(1), r.getAs[Array[Byte]](2)))
-      .toSeq.groupBy(_._1))
+    else Some(spark.sparkContext.broadcast(norms.select("field", "chunk", "blob").collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getAs[Array[Byte]](2)).toMap))
+  }
+
+  /** Bucket partition pruning plus term pushdown for `terms` — postings and
+    * termstats share the (bucket, field, term) layout. */
+  private def termFilter(terms: Seq[(String, String)]): Column = {
+    val buckets = terms.map { case (_, t) => IndexBuilder.bucketOf(t, manifest.buckets) }.distinct
+    col("bucket").isin(buckets: _*) &&
+      terms.map { case (f, t) => col("field") === f && col("term") === t }.reduce(_ || _)
   }
 
   /** (df, pv) per query term; terms absent from the corpus are omitted. */
@@ -168,10 +170,8 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     val found: Map[(String, String), (Long, Long)] =
       if (missing.isEmpty) Map.empty
       else {
-        val buckets = missing.map { case (_, t) => IndexBuilder.bucketOf(t, manifest.buckets) }.distinct
-        val cond = missing.map { case (f, t) => col("field") === f && col("term") === t }.reduce(_ || _)
         val f = termstats
-          .filter(col("bucket").isin(buckets: _*) && cond)
+          .filter(termFilter(missing))
           .select("field", "term", "df", "pv")
           .collect()
           .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
@@ -185,37 +185,18 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     q.terms.flatMap(k => all(k).map(v => k -> v)).toMap
   }
 
-  /** Top-k (docId, score), exact BM25 over the AND intersection. */
-  def topK(q: SearchQuery): DataFrame = {
-    val key = (q.terms, q.k)
-    val hit = planCache.get(key)
-    if (hit != null) return hit
-    // build OUTSIDE the map: planning runs a termstats Spark job, and a
-    // computeIfAbsent mapping that long would serialize unrelated queries
-    // hashing to the same bin (CHM requires short mappings). A concurrent
-    // duplicate build is harmless — putIfAbsent keeps the first. The plan
-    // is only cached if no norms-cache clear happened while building (else
-    // it pins an evicted norms generation; see normsGen).
-    val gen = normsGen.get()
-    val df = topKUncached(q)
-    cacheLock.synchronized {
-      if (normsGen.get() != gen) return df
-      if (planCache.size >= PlanCacheMaxEntries) planCache.clear()
-      val prev = planCache.putIfAbsent(key, df)
-      if (prev != null) prev else df
-    }
-  }
+  /** Top-k (docId, score), exact BM25 over the AND intersection; the plan is
+    * cached per (terms, k). */
+  def topK(q: SearchQuery): DataFrame =
+    memo(planCache, PlanCacheMaxEntries, (q.terms, q.k))(topKUncached(q))
 
-  /** The cache-miss path of [[topK]] — also the honest target for latency
-    * diagnostics (tools.LatProbe), which must measure construction and
-    * planning, not a map lookup. */
-  private[graft] def topKUncached(q: SearchQuery): DataFrame = {
-    import spark.implicits._
-    candidates(q, q.k)
+  /** The one top-k plan builder: [[topK]]'s cache-miss path and, with kernel
+    * accumulators, [[topKProfiled]]'s plan. */
+  private def topKUncached(q: SearchQuery, tel: QueryKernel.KernelTelemetry = null): DataFrame =
+    candidates(q, q.k, tel)
       .toDF("docId", "score")
       .orderBy(desc("score"), asc("docId"))
       .limit(q.k)
-  }
 
   /** Paged ranked hits — the reference's pagination (O4,
     * module/poseidon.go:134-143 slices [page*size, ...) of the ordered id
@@ -276,71 +257,31 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     * are scored exactly, joined to their stored fields, filtered, then cut —
     * pages always fill while scores stay exact. The docstore join is
     * planner-chosen (broadcast only when the hit set is actually small). */
-  def fetchFiltered(q: SearchQuery, predicate: org.apache.spark.sql.Column): DataFrame = {
-    // the scoring subtree is the expensive plan (chunk shuffle + norms
-    // injection) and is k- and predicate-independent — cache it; the
-    // per-call join/filter/limit on top is cheap to re-plan
-    val hit = scoreAllCache.get(q.terms)
-    val scored = if (hit != null) hit else {
-      val gen = normsGen.get()
-      val df = scoreAll(q)
-      cacheLock.synchronized {
-        if (normsGen.get() != gen) df
-        else {
-          if (scoreAllCache.size >= PlanCacheMaxEntries) scoreAllCache.clear()
-          val prev = scoreAllCache.putIfAbsent(q.terms, df)
-          if (prev != null) prev else df
-        }
-      }
-    }
-    scored
+  def fetchFiltered(q: SearchQuery, predicate: Column): DataFrame =
+    // the scoring subtree is the expensive plan (posting scan + chunk
+    // shuffle) and is k- and predicate-independent — cache it; the per-call
+    // join/filter/limit on top is cheap to re-plan
+    memo(scoreAllCache, PlanCacheMaxEntries, q.terms)(scoreAll(q))
       .join(docstore, Seq("docId"))
       .filter(predicate)
       .orderBy(desc("score"), asc("docId"))
       .limit(q.k)
-  }
 
   /** Count of the AND intersection — the reference's pv/uv stats path needs
     * only a count, so this skips scoring, norms, and the top-k heap entirely
     * (a count-only kernel instead of candidates(q, MaxValue)). */
-  def matchCount(q: SearchQuery): Long = {
+  def matchCount(q: SearchQuery): Long = memo(countCache, StatsCacheMaxEntries, q.terms) {
     import spark.implicits._
-    val memo = countCache.get(q.terms)
-    if (memo != null) return memo.longValue()
     val ts = termStatsOf(q)
-    if (q.terms.isEmpty || q.terms.exists(t => !ts.contains(t))) return 0L
-    if (q.terms.size == 1) return ts(q.terms.head)._1 // df IS the count
-
-    val buckets = q.terms.map { case (_, t) => IndexBuilder.bucketOf(t, manifest.buckets) }.distinct
-    val cond = q.terms.map { case (f, t) => col("field") === f && col("term") === t }.reduce(_ || _)
-    val rows = postings
-      .filter(col("bucket").isin(buckets: _*) && cond)
-      .select(col("field"), col("term"), col("chunk"), col("blob"))
-      .as[(String, String, Long, Array[Byte])]
-    val terms = q.terms.toArray
-    val numChunks = math.max(1L, (manifest.numDocs + manifest.chunkDocs - 1) / manifest.chunkDocs)
-    val p = math.min(numChunks, spark.sessionState.conf.numShufflePartitions.toLong).toInt
-    val total = rows
-      .repartition(p, col("chunk"))
-      .sortWithinPartitions("chunk")
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[Long] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): Long = {
-            val chunk = buf.head._3
-            val group = scala.collection.mutable.ArrayBuffer[(String, String, Array[Byte])]()
-            while (buf.hasNext && buf.head._3 == chunk) {
-              val r = buf.next(); group += ((r._1, r._2, r._4))
-            }
-            QueryKernel.countChunk(terms, group.toSeq)
-          }
-        }
+    val n =
+      if (q.terms.isEmpty || q.terms.exists(t => !ts.contains(t))) 0L
+      else if (q.terms.size == 1) ts(q.terms.head)._1 // df IS the count
+      else {
+        val terms = q.terms.toArray
+        perChunk(q.terms)((_, rows) => Iterator(QueryKernel.countChunk(terms, rows)))
+          .toDF("n").agg(sum("n")).collect()(0).getLong(0)
       }
-      .toDF("n").agg(sum("n")).collect()(0).getLong(0)
-    if (countCache.size >= StatsCacheMaxEntries) countCache.clear()
-    countCache.put(q.terms, total)
-    total
+    Long.box(n)
   }
 
   /** All docIds matching the AND conjunction, ascending (the reference's
@@ -351,101 +292,79 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
   }
 
   /** Exact BM25 scores for EVERY matching doc (no top-k cut). */
-  def scoreAll(q: SearchQuery): DataFrame = {
-    import spark.implicits._
-    candidates(q, Int.MaxValue).toDF("docId", "score")
-  }
+  def scoreAll(q: SearchQuery): DataFrame = candidates(q, Int.MaxValue).toDF("docId", "score")
 
-  /** Uncached profiled top-k: the exact topKUncached plan run with kernel
-    * accumulators registered, returning (hits, counters). Bypasses the plan
-    * cache on purpose — an accumulator is per-query state a cached plan must
-    * not pin — so this is a diagnostic surface (SearchCli explain), not the
-    * serving path. */
+  /** Uncached profiled top-k: [[topK]]'s plan built with kernel accumulators
+    * registered, returning (hits, counters). Bypasses the plan cache on
+    * purpose — an accumulator is per-query state a cached plan must not pin
+    * — so this is a diagnostic surface (SearchCli explain), not the serving
+    * path. */
   def topKProfiled(q: SearchQuery): (Array[(Long, Double)], Map[String, Long]) = {
     import spark.implicits._
     val tel = QueryKernel.KernelTelemetry.register(spark)
-    val hits = candidates(q, q.k, tel)
-      .toDF("docId", "score")
-      .orderBy(desc("score"), asc("docId"))
-      .limit(q.k)
-      .as[(Long, Double)]
-      .collect()
-    (hits, tel.snapshot)
+    (topKUncached(q, tel).as[(Long, Double)].collect(), tel.snapshot)
   }
 
   /** Per-chunk conjunctive scoring; emits up to `localK` best per chunk. */
-  private[graft] def candidates(q: SearchQuery, localK: Int,
-                                tel: QueryKernel.KernelTelemetry = null): Dataset[(Long, Double)] = {
+  private def candidates(q: SearchQuery, localK: Int,
+                         tel: QueryKernel.KernelTelemetry = null): Dataset[(Long, Double)] = {
     import spark.implicits._
     val ts = termStatsOf(q)
     if (q.terms.isEmpty || q.terms.exists(t => !ts.contains(t)))
       return spark.emptyDataset[(Long, Double)]
 
-    val buckets = q.terms.map { case (_, t) => IndexBuilder.bucketOf(t, manifest.buckets) }.distinct
-    val cond = q.terms.map { case (f, t) => col("field") === f && col("term") === t }.reduce(_ || _)
-    val prows = postings
-      .filter(col("bucket").isin(buckets: _*) && cond)
-      .select(col("field"), col("term"), col("chunk"), col("blob"))
-    // norms for the query fields ride the same chunk shuffle under a
-    // sentinel term: injected as a LOCAL relation when the sidecar is
-    // driver-cached (interactive fast path — no scan/join stages), else
-    // pruned to chunks that actually have postings via a semi-join on a
-    // tiny distinct set (the distributed 100 TB path)
-    val fields = q.terms.map(_._1).distinct
-    val nrows = normsLocal match {
-      case Some(byField) =>
-        val nkey = fields.sorted
-        val nhit = normsDsCache.get(nkey)
-        if (nhit != null) nhit
-        else {
-          // clear only when INSERTING at the cap (a hit must not wipe the
-          // cache), and clear planCache with it — cached plans pin evicted
-          // norms LocalRelations, so evicting one without the other frees
-          // nothing and can retain multiple generations of the same copy
-          if (normsDsCache.size >= NormsDsCacheMaxEntries) cacheLock.synchronized {
-            normsDsCache.clear(); planCache.clear(); scoreAllCache.clear()
-            normsGen.incrementAndGet()
-          }
-          normsDsCache.computeIfAbsent(nkey, fs => // pure local encode, no job
-            spark.createDataset(fs.flatMap(f => byField.getOrElse(f, Seq.empty)))
-              .toDF("field", "term", "chunk", "blob"))
-        }
-      case None =>
-        norms
-          .filter(col("field").isin(fields: _*))
-          .join(prows.select("chunk").distinct(), Seq("chunk"), "left_semi")
-          .select(col("field"), lit(QueryKernel.NormsTerm).as("term"), col("chunk"), col("blob"))
-    }
-    val rows = prows.unionAll(nrows)
-      .as[(String, String, Long, Array[Byte])]
-
     val terms = q.terms.toArray
     val idfs = terms.map { case (f, t) => Bm25.idf(manifest.numDocs, ts((f, t))._1) }
     val avgdls = terms.map { case (f, _) => manifest.avgdl(f) }
-    val kLocal = localK
-    val telLocal = tel
+    val fields = q.terms.map(_._1).distinct
+    val chunkDocs = manifest.chunkDocs
+    val normsB = normsLocal
+    // without the broadcast, the query fields' norms ride the chunk shuffle
+    // under a sentinel term, pruned by a semi-join on the (tiny) distinct
+    // set of chunks that hold postings
+    val withNorms: DataFrame => DataFrame =
+      if (normsB.isDefined) identity
+      else prows => prows.unionAll(norms
+        .filter(col("field").isin(fields: _*))
+        .join(prows.select("chunk").distinct(), Seq("chunk"), "left_semi")
+        .select(col("field"), lit(QueryKernel.NormsTerm).as("term"), col("chunk"), col("blob")))
+    perChunk(q.terms, withNorms) { (chunk, rows) =>
+      val normRows = normsB.iterator.flatMap(b => fields.flatMap(f =>
+        b.value.get((f, chunk)).map(blob => (f, QueryKernel.NormsTerm, blob))))
+      QueryKernel.scoreChunk(terms, idfs, avgdls, chunk * chunkDocs, localK, rows ++ normRows, tel)
+    }
+  }
 
-    // shuffle sized to the REAL key space: the chunk count is known from the
-    // manifest, so a short query over a small index runs 1-2 tasks instead
-    // of spark.sql.shuffle.partitions mostly-empty ones (measured ~1.5x
-    // lower latency); at scale this saturates at the session parallelism.
-    val chunkDocsL = manifest.chunkDocs
+  /** The one posting scan + chunk shuffle behind every conjunctive query:
+    * the terms' postings (bucket-pruned, term-filtered), plus what `addRows`
+    * unions onto them, are repartitioned and sorted by chunk, and each chunk's
+    * (field, term, blob) rows go to `kernel` as one group. The shuffle is
+    * sized to the REAL key space, min(chunk count, shuffle partitions): a
+    * short query over a small index runs 1-2 tasks instead of
+    * spark.sql.shuffle.partitions mostly-empty ones (measured ~1.5x lower
+    * latency); at scale it saturates at the session parallelism. */
+  private def perChunk[T: Encoder](terms: Seq[(String, String)],
+                                   addRows: DataFrame => DataFrame = identity)(
+      kernel: (Long, Iterator[(String, String, Array[Byte])]) => Iterator[T]): Dataset[T] = {
+    import spark.implicits._
+    val prows = postings.filter(termFilter(terms)).select("field", "term", "chunk", "blob")
     val numChunks = math.max(1L, (manifest.numDocs + manifest.chunkDocs - 1) / manifest.chunkDocs)
     val p = math.min(numChunks, spark.sessionState.conf.numShufflePartitions.toLong).toInt
-    rows
+    addRows(prows).as[(String, String, Long, Array[Byte])]
       .repartition(p, col("chunk"))
       .sortWithinPartitions("chunk")
       .mapPartitions { it =>
         // stream consecutive same-chunk runs into the kernel
         val buf = it.buffered
-        new Iterator[Iterator[(Long, Double)]] {
+        new Iterator[Iterator[T]] {
           def hasNext: Boolean = buf.hasNext
-          def next(): Iterator[(Long, Double)] = {
+          def next(): Iterator[T] = {
             val chunk = buf.head._3
-            val group = scala.collection.mutable.ArrayBuffer[(String, String, Long, Array[Byte])]()
-            while (buf.hasNext && buf.head._3 == chunk) group += buf.next()
-            QueryKernel.scoreChunk(terms, idfs, avgdls, chunk * chunkDocsL, kLocal,
-              group.iterator, telLocal)
+            val group = scala.collection.mutable.ArrayBuffer[(String, String, Array[Byte])]()
+            while (buf.hasNext && buf.head._3 == chunk) {
+              val r = buf.next(); group += ((r._1, r._2, r._4))
+            }
+            kernel(chunk, group.iterator)
           }
         }.flatten
       }
@@ -510,54 +429,62 @@ object QueryKernel extends Serializable {
   /** Sentinel term carrying a chunk's norms blob through the shuffle. */
   val NormsTerm = "\u0000norms"
 
-  /** Count the conjunction within one chunk — no scoring, no dl, no heap.
-    * Cursor walk identical to scoreChunk's alignment (driver = rarest). */
-  def countChunk(terms: Array[(String, String)],
-                 group: Seq[(String, String, Array[Byte])]): Long = {
-    val blobs = scala.collection.mutable.HashMap[(String, String), Array[Byte]]()
-    group.foreach { case (f, t, b) => blobs((f, t)) = b }
-    if (terms.exists(t => !blobs.contains(t))) return 0L
-    val nT = terms.length
-    val cursors = Array.tabulate(nT)(i => new PostingCodec.Cursor(blobs(terms(i))))
-    if (nT == 1) return cursors(0).numPostings.toLong
-    val order = Array.range(0, nT).sortBy(i => cursors(i).numPostings)
-    val drv = cursors(order(0))
-    var n = 0L
-    var alive = drv.advance()
-    var i2 = 1
-    while (alive && i2 < nT) { alive = cursors(order(i2)).advance(); i2 += 1 }
-    while (alive) {
+  /** One chunk's conjunction walk, shared by [[countChunk]] and
+    * [[scoreChunk]]: one cursor per query term, `order` rarest first (the
+    * driver `drv` is the rarest, like the reference starting from the
+    * smallest DocItemList in DocIdIntersect, doc_gz_client.go:73-104), every
+    * cursor advanced onto its first posting. */
+  private final class Walk(val cursors: Array[PostingCodec.Cursor]) {
+    val order: Array[Int] = Array.range(0, cursors.length).sortBy(i => cursors(i).numPostings)
+    val drv: PostingCodec.Cursor = cursors(order(0))
+    var alive: Boolean = order.forall(i => cursors(i).advance())
+
+    /** One alignment step on the driver's docId: true when every cursor sits
+      * on it. A cursor past it moves the driver up to that cursor's docId
+      * (false: the caller steps again); an exhausted cursor clears `alive`. */
+    def aligned(): Boolean = {
       val target = drv.docId
       var bumped = false
       var j = 1
-      while (alive && j < nT && !bumped) {
+      while (alive && j < order.length && !bumped) {
         val c = cursors(order(j))
         if (!c.advanceTo(target)) alive = false
         else if (c.docId > target) {
-          if (!drv.advanceTo(c.docId)) alive = false
+          alive = drv.advanceTo(c.docId)
           bumped = true
         }
         j += 1
       }
-      if (alive && !bumped) {
-        n += 1
-        alive = drv.advance()
-      }
+      alive && !bumped
     }
-    n
   }
 
+  /** A chunk's (field, term) -> blob map (norm rows under [[NormsTerm]]), or
+    * None when a query term has no postings in the chunk: the AND is empty. */
+  private def blobsOf(terms: Array[(String, String)], rows: Iterator[(String, String, Array[Byte])])
+      : Option[Map[(String, String), Array[Byte]]] = {
+    val blobs = rows.map { case (f, t, b) => (f, t) -> b }.toMap
+    if (terms.forall(blobs.contains)) Some(blobs) else None
+  }
+
+  /** Count the conjunction within one chunk — no scoring, no dl, no heap. */
+  def countChunk(terms: Array[(String, String)], rows: Iterator[(String, String, Array[Byte])]): Long =
+    blobsOf(terms, rows).fold(0L) { blobs =>
+      val w = new Walk(terms.map(t => new PostingCodec.Cursor(blobs(t))))
+      var n = 0L
+      while (w.alive) if (w.aligned()) { n += 1; w.alive = w.drv.advance() }
+      n
+    }
 
   /** Conjunctive document-at-a-time traversal with block-max skipping.
     *
-    * The driver cursor is the rarest term (fewest postings in this chunk,
-    * like the reference starting from the smallest DocItemList in
-    * DocIdIntersect, doc_gz_client.go:73-104). When the heap holds k results,
-    * a driver block whose upper bound (its block-max + the other terms'
-    * static score ceilings idf*(k1+1)) cannot beat the current kth score is
-    * skipped without decoding — block-max WAND; exact because the bound is
-    * conservative and within a chunk later candidates have larger docIds (tie
-    * order score desc / docId asc preserved).
+    * When the heap holds k results, a driver block whose upper bound (its
+    * block-max + the other terms' static score ceilings idf*(k1+1)) cannot
+    * beat the current kth score is skipped without decoding — block-max
+    * WAND; exact because the bound is conservative and within a chunk later
+    * candidates have larger docIds (tie order score desc / docId asc
+    * preserved). `rows` carries the chunk's postings and the query fields'
+    * norms under [[NormsTerm]].
     */
   def scoreChunk(
       terms: Array[(String, String)],
@@ -565,34 +492,26 @@ object QueryKernel extends Serializable {
       avgdls: Array[Double],
       baseDocId: Long,
       k: Int,
-      it: Iterator[(String, String, Long, Array[Byte])],
+      rows: Iterator[(String, String, Array[Byte])],
       tel: KernelTelemetry = null): Iterator[(Long, Double)] = {
 
     if (k <= 0) return Iterator.empty // k=0 top-k is legitimately empty
-
-    val blobs = scala.collection.mutable.HashMap[(String, String), Array[Byte]]()
-    val normBlobs = scala.collection.mutable.HashMap[String, Array[Byte]]()
-    it.foreach { case (f, t, _, b) =>
-      if (t == NormsTerm) normBlobs(f) = b else blobs((f, t)) = b
+    val blobs = blobsOf(terms, rows) match {
+      case Some(b) => b
+      case None => return Iterator.empty
     }
-    // AND: every query term must exist in this chunk
-    if (terms.exists(t => !blobs.contains(t))) return Iterator.empty
-
     val dlOfField: Map[String, Long => Int] = terms.map(_._1).distinct.map { f =>
-      val blob = normBlobs.getOrElse(f,
+      val blob = blobs.getOrElse((f, NormsTerm),
         throw new IllegalStateException(s"norms missing for field $f in chunk base $baseDocId"))
       f -> PostingCodec.dlLookup(PostingCodec.decodeNorms(blob), baseDocId)
     }.toMap
-
+    val w = new Walk(terms.map(t => new PostingCodec.Cursor(blobs(t), dlOfField(t._1))))
     val nT = terms.length
-    val cursors = Array.tabulate(nT)(i => new PostingCodec.Cursor(blobs(terms(i)), dlOfField(terms(i)._1)))
-    val order = Array.range(0, nT).sortBy(i => cursors(i).numPostings)
-    val drv = cursors(order(0))
-    val drvIdx = order(0)
+    val drv = w.drv
     // static ceilings for the non-driver terms (tfNorm < k1+1 always)
     var othersCeil = 0.0
     var oi = 1
-    while (oi < nT) { othersCeil += idfs(order(oi)) * (Bm25.K1 + 1.0); oi += 1 }
+    while (oi < nT) { othersCeil += idfs(w.order(oi)) * (Bm25.K1 + 1.0); oi += 1 }
 
     // heap head = current worst of the top-k: lowest score, tie -> larger docId
     // (PriorityQueue dequeues the ordering's max, so "worst" must rank highest)
@@ -601,74 +520,50 @@ object QueryKernel extends Serializable {
     val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Double)](ord)
 
     var docsScored = 0L
-    var alive = drv.advance()
-    var i2 = 1
-    while (alive && i2 < nT) { alive = cursors(order(i2)).advance(); i2 += 1 }
-
-    while (alive) {
+    while (w.alive) {
       // block-max skip on the driver
       if (heap.size >= k && k != Int.MaxValue) {
         val threshold = heap.head._2
         var skipped = true
-        while (alive && skipped) {
+        while (w.alive && skipped) {
           if (drv.blockMaxScore + othersCeil <= threshold) {
             val lastBefore = drv.blockLastDocId
-            alive = drv.advanceTo(lastBefore + 1)
+            w.alive = drv.advanceTo(lastBefore + 1)
             // no-progress guard: on a corrupt blob (entry docIds beyond the
             // block's recorded last) advanceTo can return true in place —
             // fail loudly instead of spinning forever
-            if (alive && drv.blockLastDocId <= lastBefore)
+            if (w.alive && drv.blockLastDocId <= lastBefore)
               throw new IllegalStateException(
                 s"corrupt posting block: lastDocId $lastBefore did not advance (docId=${drv.docId})")
           } else skipped = false
         }
       }
-      if (alive) {
-        // align all cursors on drv.docId (conjunction)
+      if (w.alive && w.aligned()) {
+        // score in QUERY-TERM order (FP-identical to the oracle)
         val target = drv.docId
-        var aligned = true
-        var j = 1
-        var bumped = false
-        while (alive && j < nT && !bumped) {
-          val c = cursors(order(j))
-          if (!c.advanceTo(target)) { alive = false }
-          else if (c.docId > target) {
-            // driver must catch up; restart alignment
-            if (!drv.advanceTo(c.docId)) alive = false
-            bumped = true
-          }
-          j += 1
+        var s = 0.0
+        var qi = 0
+        while (qi < nT) {
+          val c = w.cursors(qi)
+          s += idfs(qi) * Bm25.tfNorm(c.tf, c.dl, avgdls(qi))
+          qi += 1
         }
-        aligned = alive && !bumped
-        if (aligned) {
-          // score in QUERY-TERM order (FP-identical to the oracle)
-          var s = 0.0
-          var qi = 0
-          while (qi < nT) {
-            val c = cursors(qi)
-            s += idfs(qi) * Bm25.tfNorm(c.tf, c.dl, avgdls(qi))
-            qi += 1
-          }
-          docsScored += 1
-          if (k == Int.MaxValue) heap.enqueue((target, s))
-          else if (heap.size < k) heap.enqueue((target, s))
-          else {
-            val (wd, ws) = heap.head
-            if (s > ws || (s == ws && target < wd)) { heap.dequeue(); heap.enqueue((target, s)) }
-          }
-          alive = drv.advance()
+        docsScored += 1
+        if (k == Int.MaxValue) heap.enqueue((target, s))
+        else if (heap.size < k) heap.enqueue((target, s))
+        else {
+          val (wd, ws) = heap.head
+          if (s > ws || (s == ws && target < wd)) { heap.dequeue(); heap.enqueue((target, s)) }
         }
+        w.alive = drv.advance()
       }
     }
     if (tel != null) {
       tel.docsScored.add(docsScored)
-      var ci = 0
-      while (ci < nT) {
-        val c = cursors(ci)
+      w.cursors.foreach { c =>
         tel.postingsDecoded.add(c.decodedPostings)
         tel.postingsSkipped.add(c.skippedPostings)
         tel.blocksSkipped.add(c.skippedBlocks)
-        ci += 1
       }
     }
     heap.iterator

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.rng.Seed
 import graft.build.{DocIds, IndexBuilder, IndexConfig}
 import graft.gen.TranscriptGen
 import graft.model.DocTurn
@@ -102,8 +105,8 @@ class EndToEndSpec extends SparkFunSuite {
     } finally pool.shutdownNow()
   }
 
-  test("norms paths agree: driver-cached LocalRelation == distributed semi-join") {
-    // the serving fast path injects cached norms as a LocalRelation; the
+  test("norms paths agree: broadcast norms == distributed semi-join") {
+    // the serving fast path looks norms up in a broadcast map; the
     // 100 TB path semi-joins norms to chunks with postings. Same results
     // required on the full query set (rank identity covers the fast path —
     // here a size-cap override of 0 forces a fresh engine onto the
@@ -219,6 +222,46 @@ class EndToEndSpec extends SparkFunSuite {
         else posts.map(_.keySet).reduce(_ intersect _).size.toLong
       assert(engine.matchCount(q) == exp, name)
     }
+  }
+
+  test("property: random AND queries, topK and matchCount == oracle on both norms paths") {
+    // terms come from the index's own vocabulary: the 40 most frequent text
+    // terms (so 2-4 term ANDs often intersect), any text term, every tool
+    // and role term, and absent terms in each field
+    def sorted(f: String) = oracle.tfs.toSeq.filter(_._1._1 == f).sortBy { case ((_, t), m) => (-m.size, t) }.map(_._1)
+    val term: Gen[(String, String)] = Gen.frequency(
+      4 -> Gen.oneOf(sorted("text").take(40)),
+      1 -> Gen.oneOf(sorted("text")),
+      2 -> Gen.oneOf(sorted("tool")),
+      2 -> Gen.oneOf(sorted("role")),
+      1 -> Gen.oneOf(Bm25Oracle.Fields).map(f => (f, "zzzabsent")))
+    val query: Gen[SearchQuery] = for {
+      n <- Gen.choose(1, 4)
+      terms <- Gen.listOfN(n, term)
+      k <- Gen.oneOf(1, 10, 100)
+    } yield SearchQuery(terms.distinct, k)
+
+    val prop = "graft.norms.cache.max.bytes"
+    sys.props(prop) = "0"
+    val distEngine = try new QueryEngine(spark, indexDir) finally sys.props.remove(prop)
+    def bits(hits: Seq[(Long, Double)]) = hits.map { case (d, s) => (d, java.lang.Double.doubleToRawLongBits(s)) }
+    var multiTermHits = 0
+    val property = Prop.forAllNoShrink(query) { q =>
+      val expTop = bits(Bm25Oracle.topK(oracle, q))
+      val expCount = Bm25Oracle.stats(oracle, q).total
+      if (q.terms.size > 1 && expCount > 0) multiTermHits += 1
+      Seq("broadcast" -> engine, "semi-join" -> distEngine).map { case (path, e) =>
+        val got = bits(e.topK(q).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+        (got == expTop) :| s"$path topK $q" && (e.matchCount(q) == expCount) :| s"$path matchCount $q"
+      }.reduce(_ && _)
+    }
+    val params = Test.Parameters.default
+      .withMinSuccessfulTests(30)
+      .withWorkers(1)
+      .withInitialSeed(Seed(20261018L))
+    val result = Test.check(params, property)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+    assert(multiTermHits >= 5, s"only $multiTermHits multi-term cases had matches")
   }
 
   test("fetchFiltered: predicate applies below the top-k cut, scores exact") {

@@ -72,6 +72,28 @@ class PlanSpec extends SparkFunSuite {
     assert(plan.contains("TakeOrderedAndProject"), s"no top-n in:\n$plan")
   }
 
+  test("QueryEngine.topK with broadcast norms: one postings scan, one shuffle") {
+    val q = graft.query.SearchQuery.of(Seq("text" -> Seq("error")), 20)
+    val df = new graft.query.QueryEngine(spark, dir).topK(q)
+    assert(df.collect().nonEmpty)
+    val executed = df.queryExecution.executedPlan
+    val plan = executedPlan(df)
+    // the norms reach the kernel through a broadcast variable: no norms scan,
+    // no local relation in the plan, and only postings cross the chunk shuffle
+    val scans = PlanSpec.collect(executed) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.relation.location.rootPaths.mkString(",")
+    }
+    assert(scans.length == 1 && scans.head.endsWith("postings"), s"scans $scans in:\n$plan")
+    val local = PlanSpec.collect(executed) {
+      case l: org.apache.spark.sql.execution.LocalTableScanExec => l.nodeName
+    }
+    assert(local.isEmpty, s"local relation in:\n$plan")
+    val shuffles = PlanSpec.collect(executed) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e.outputPartitioning.toString
+    }
+    assert(shuffles.length == 1, s"shuffles $shuffles in:\n$plan")
+  }
+
   test("column pruning: projecting (term) reads only needed columns") {
     val df = spark.read.parquet(s"$dir/postings").select("term")
     val plan = executedPlan(df)
