@@ -55,12 +55,15 @@ final case class SearchStats(total: Long, pv: Long, uv: Long)
 /** Distributed BM25 top-k over the chunked/bucketed posting table.
   *
   * Query DAG (SURVEY.md §3.2 rebuild):
-  *   termstats lookup (bucket partition-pruned, tiny)            — job 1
+  *   termstats lookup in the resident term dictionary: a map lookup; a
+  *     bucket not loaded yet loads whole, once per engine (bucket-pruned
+  *     scan, one job for all of a query's missing buckets; a bucket past
+  *     the size cap gives only the query's terms and stays out)
   *   postings scan (bucket-pruned, term-filtered)                 \
-  *     -> shuffle by chunk (only the query terms' postings move)   } job 2
+  *     -> shuffle by chunk (only the query terms' postings move)   } job 1
   *     -> per-chunk conjunctive DAAT + block-max skip -> local k  /
   *     -> global top-k (TakeOrderedAndProject tree-reduce)
-  *   docstore fetch: docId IN (collected hits) pushdown + score    — job 3
+  *   docstore fetch: docId IN (collected hits) pushdown + score    — job 2
   *     looked up from the collected pairs; one scan, no exchange
   *
   * The kernel needs each chunk's doc lengths (the norms sidecar). A small
@@ -86,13 +89,20 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
   private lazy val norms: DataFrame = spark.read.parquet(s"$dir/norms")
   lazy val docstore: DataFrame = spark.read.parquet(s"$dir/docstore")
 
-  // driver-side term-dictionary cache: repeated queries skip the stats job
-  // entirely (absent terms cached as None). The analog of the reference
-  // searcher's meta multiget being fronted by memcached (S10). Bounded like
-  // planCache (entries are tiny, but a long-lived engine fed adversarial
-  // vocabulary should not grow without limit).
-  private val StatsCacheMaxEntries = 1 << 20
-  private val statsCache = new ConcurrentHashMap[(String, String), Option[(Long, Long)]]()
+  // resident term dictionary: termstats bucket -> every (field, term) ->
+  // (df, pv) row of that bucket, loaded on first touch. A bucket loads once
+  // per engine, so any later term in it, present or absent, is a map lookup
+  // instead of a Spark job — the analog of the reference searcher's meta
+  // multiget being fronted by memcached (S10). Two bounds keep the driver's
+  // memory in check on a large vocabulary. A bucket whose termstats files
+  // pass TermDictBucketMaxBytes never loads (its terms are looked up by term
+  // pushdown, bounded by the query), so one load collects at most that much;
+  // ~10 B per row at perfbench size puts ~400k entries at the cap. And the
+  // dictionary holds at most TermDictMaxEntries (field, term) entries across
+  // buckets, cleared wholesale when a load would pass them, like [[memo]].
+  private val TermDictMaxEntries = 1 << 20
+  private val TermDictBucketMaxBytes = 4L << 20
+  private val termDict = new ConcurrentHashMap[Int, Map[(String, String), (Long, Long)]]()
 
   // prepared-plan cache: a repeated interactive query (the dominant serving
   // pattern; the reference fronts its searcher with memcached the same way)
@@ -115,11 +125,12 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
   // AND-intersection count is a pure function of the term set — repeated
   // pv/uv stats queries (as interactive as top-k; the reference fronts its
   // stats multiget with memcached the same way) become a map hit instead of
-  // a kernel job. Bounded like statsCache.
+  // a kernel job. Bounded like planCache: cleared wholesale at the cap.
+  private val CountCacheMaxEntries = 1 << 20
   private val countCache = new ConcurrentHashMap[Seq[(String, String)], java.lang.Long]()
 
   /** `cache(key)`, else `build` published with putIfAbsent. The build runs
-    * OUTSIDE the map: it runs a termstats Spark job, and a computeIfAbsent
+    * OUTSIDE the map: it can run a Spark job, and a computeIfAbsent
     * mapping that long would serialize unrelated keys hashing to the same
     * bin. A concurrent duplicate build is harmless — the first published
     * value wins. Cleared wholesale when `max` entries are reached. */
@@ -160,29 +171,53 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
   }
 
   /** (df, pv) per query term; terms absent from the corpus are omitted. */
-  def termStatsOf(q: SearchQuery): Map[(String, String), (Long, Long)] = {
-    if (q.terms.isEmpty) return Map.empty
-    // snapshot cached values FIRST: the result below assembles from local
-    // data only, so a concurrent (or our own) cache clear between the put
-    // and a read-back can never null out a term mid-query
-    val cached = q.terms.flatMap(k => Option(statsCache.get(k)).map(k -> _)).toMap
-    val missing = q.terms.filterNot(cached.contains).distinct
-    val found: Map[(String, String), (Long, Long)] =
+  def termStatsOf(q: SearchQuery): Map[(String, String), (Long, Long)] =
+    dictionaryLookup(q.terms, TermDictMaxEntries, TermDictBucketMaxBytes)
+
+  /** [[termStatsOf]] over a dictionary of at most `maxEntries` entries that
+    * loads only buckets whose termstats files hold at most `maxBucketBytes`.
+    * ONE bucket-pruned termstats scan serves all of `terms`' buckets not
+    * resident yet: it reads each such bucket within the byte cap whole, and
+    * from a bucket past it (or of unknown size: non-local storage) only the
+    * query's terms. A whole bucket is published with putIfAbsent (a
+    * concurrent duplicate load is harmless: both read the same immutable
+    * index) unless it alone holds more than `maxEntries` entries; the
+    * dictionary is cleared wholesale first when the publish would pass
+    * `maxEntries`. The result assembles from bucket maps held in local
+    * references, so a concurrent (or our own) clear can never drop a term
+    * mid-query. */
+  private[graft] def dictionaryLookup(terms: Seq[(String, String)], maxEntries: Int, maxBucketBytes: Long)
+      : Map[(String, String), (Long, Long)] = {
+    val bucketOf = terms.map { case (_, t) => t -> IndexBuilder.bucketOf(t, manifest.buckets) }.toMap
+    val held = bucketOf.values.toSeq.distinct.map(b => b -> termDict.get(b))
+    val missing = held.collect { case (b, null) => b }
+    val (whole, big) = missing.partition(b => termstatsBytes(b) <= maxBucketBytes)
+    val pushdown = terms.filter(t => big.contains(bucketOf(t._2))).distinct
+    val fetched: Map[Int, Map[(String, String), (Long, Long)]] =
       if (missing.isEmpty) Map.empty
       else {
-        val f = termstats
-          .filter(termFilter(missing))
-          .select("field", "term", "df", "pv")
+        val scope = col("bucket").isin(whole: _*) || (if (pushdown.isEmpty) lit(false) else termFilter(pushdown))
+        val rows = termstats
+          .filter(col("bucket").isin(missing: _*) && scope)
+          .select("bucket", "field", "term", "df", "pv")
           .collect()
-          .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
-          .toMap
-        if (statsCache.size + missing.size > StatsCacheMaxEntries) statsCache.clear()
-        missing.foreach(k => statsCache.put(k, f.get(k)))
-        f
+          .groupMap(_.getInt(0))(r => (r.getString(1), r.getString(2)) -> (r.getLong(3), r.getLong(4)))
+        val fresh = missing.map(b => b -> rows.get(b).fold(Map.empty[(String, String), (Long, Long)])(_.toMap)).toMap
+        whole.map(b => b -> fresh(b)).filter(_._2.size <= maxEntries).foreach { case (b, m) =>
+          if (termDict.values().stream().mapToLong(_.size.toLong).sum() + m.size > maxEntries) termDict.clear()
+          termDict.putIfAbsent(b, m)
+        }
+        fresh
       }
-    val all: Map[(String, String), Option[(Long, Long)]] =
-      cached ++ missing.map(k => k -> found.get(k))
-    q.terms.flatMap(k => all(k).map(v => k -> v)).toMap
+    val dict = held.filter(_._2 != null).toMap ++ fetched
+    terms.flatMap(k => dict(bucketOf(k._2)).get(k).map(k -> _)).toMap
+  }
+
+  /** Bytes of termstats bucket `b`'s files; unknown (Long.MaxValue) off the
+    * local filesystem, where [[normsLocal]]'s sizing fails the same way. */
+  private def termstatsBytes(b: Int): Long = {
+    val root = new java.io.File(dir, "termstats")
+    if (!root.exists()) Long.MaxValue else graft.FsUtil.dirSize(new java.io.File(root, s"bucket=$b"))
   }
 
   /** Top-k (docId, score), exact BM25 over the AND intersection; the plan is
@@ -270,7 +305,7 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
   /** Count of the AND intersection — the reference's pv/uv stats path needs
     * only a count, so this skips scoring, norms, and the top-k heap entirely
     * (a count-only kernel instead of candidates(q, MaxValue)). */
-  def matchCount(q: SearchQuery): Long = memo(countCache, StatsCacheMaxEntries, q.terms) {
+  def matchCount(q: SearchQuery): Long = memo(countCache, CountCacheMaxEntries, q.terms) {
     import spark.implicits._
     val ts = termStatsOf(q)
     val n =
@@ -288,7 +323,12 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     * unranked result order, doc_gz_client.go:101-103). */
   def matchingDocIds(q: SearchQuery): DataFrame = {
     import spark.implicits._
-    candidates(q, Int.MaxValue).map(_._1).toDF("docid").orderBy("docid")
+    val ts = termStatsOf(q)
+    if (q.terms.isEmpty || q.terms.exists(t => !ts.contains(t)))
+      return spark.emptyDataset[Long].toDF("docid")
+    val terms = q.terms.toArray
+    // the count kernel's walk, emitting docIds: no norms, scoring or heap
+    perChunk(q.terms)((_, rows) => QueryKernel.matchChunk(terms, rows)).toDF("docid").orderBy("docid")
   }
 
   /** Exact BM25 scores for EVERY matching doc (no top-k cut). */
@@ -429,7 +469,7 @@ object QueryKernel extends Serializable {
   /** Sentinel term carrying a chunk's norms blob through the shuffle. */
   val NormsTerm = "\u0000norms"
 
-  /** One chunk's conjunction walk, shared by [[countChunk]] and
+  /** One chunk's conjunction walk, shared by [[foreachMatch]] and
     * [[scoreChunk]]: one cursor per query term, `order` rarest first (the
     * driver `drv` is the rarest, like the reference starting from the
     * smallest DocItemList in DocIdIntersect, doc_gz_client.go:73-104), every
@@ -467,14 +507,28 @@ object QueryKernel extends Serializable {
     if (terms.forall(blobs.contains)) Some(blobs) else None
   }
 
-  /** Count the conjunction within one chunk — no scoring, no dl, no heap. */
-  def countChunk(terms: Array[(String, String)], rows: Iterator[(String, String, Array[Byte])]): Long =
-    blobsOf(terms, rows).fold(0L) { blobs =>
+  /** Every docId of the conjunction within one chunk, ascending, passed to
+    * `emit` — no scoring, no dl, no heap. */
+  private def foreachMatch(terms: Array[(String, String)], rows: Iterator[(String, String, Array[Byte])])(
+      emit: Long => Unit): Unit =
+    blobsOf(terms, rows).foreach { blobs =>
       val w = new Walk(terms.map(t => new PostingCodec.Cursor(blobs(t))))
-      var n = 0L
-      while (w.alive) if (w.aligned()) { n += 1; w.alive = w.drv.advance() }
-      n
+      while (w.alive) if (w.aligned()) { emit(w.drv.docId); w.alive = w.drv.advance() }
     }
+
+  /** Count the conjunction within one chunk. */
+  def countChunk(terms: Array[(String, String)], rows: Iterator[(String, String, Array[Byte])]): Long = {
+    var n = 0L
+    foreachMatch(terms, rows)(_ => n += 1)
+    n
+  }
+
+  /** The conjunction's docIds within one chunk, ascending. */
+  def matchChunk(terms: Array[(String, String)], rows: Iterator[(String, String, Array[Byte])]): Iterator[Long] = {
+    val ids = scala.collection.mutable.ArrayBuffer[Long]()
+    foreachMatch(terms, rows)(ids += _)
+    ids.iterator
+  }
 
   /** Conjunctive document-at-a-time traversal with block-max skipping.
     *

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
@@ -42,6 +44,13 @@ class EndToEndSpec extends SparkFunSuite {
     "q08_absent" -> SearchQuery.of(Seq("text" -> Seq("zzznotpresent")), 10),
     "q09_role" -> SearchQuery.of(Seq("role" -> Seq("tool"), "text" -> Seq("fail")), 15),
     "q10_dup_terms" -> SearchQuery.of(Seq("text" -> Seq("error", "error", "retry")), 10))
+
+  /** A fresh engine on the distributed norms path (a norms cache cap of 0). */
+  private def distributedEngine(): QueryEngine = {
+    val prop = "graft.norms.cache.max.bytes"
+    sys.props(prop) = "0"
+    try new QueryEngine(spark, indexDir) finally sys.props.remove(prop)
+  }
 
   test("driver flagship entry() returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
@@ -224,6 +233,112 @@ class EndToEndSpec extends SparkFunSuite {
     }
   }
 
+  test("matchingDocIds == oracle AND intersection, ascending, on both norms paths") {
+    def check(e: QueryEngine, path: String): Unit = queries.foreach { case (name, q) =>
+      val posts = q.terms.map(t => oracle.tfs.getOrElse(t, Map.empty[Long, Int]).keySet)
+      val exp = if (posts.isEmpty) Seq.empty[Long] else posts.reduce(_ intersect _).toSeq.sorted
+      val df = e.matchingDocIds(q)
+      assert(df.columns.toSeq == Seq("docid"), s"$path $name")
+      assert(df.collect().map(_.getLong(0)).toSeq == exp, s"$path $name")
+    }
+    assert(queries.count { case (_, q) => Bm25Oracle.stats(oracle, q).total > 1 } >= 5)
+    check(engine, "broadcast")
+    check(distributedEngine(), "semi-join")
+  }
+
+  /** A fresh engine on the serving profile (perfbench's and graft.Bench's):
+    * adaptive re-planning off, so a ranked query is one job. */
+  private def servingEngine(): QueryEngine = {
+    built
+    val serve = spark.newSession()
+    serve.conf.set("spark.sql.adaptive.enabled", "false")
+    new QueryEngine(serve, indexDir)
+  }
+
+  /** Spark jobs `f` submits from this thread. */
+  private def jobsOf(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"e2e-jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    try { f; ListenerBusDrain.drain(sc) } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    n.get
+  }
+
+  private def bucketOf(t: String): Int = IndexBuilder.bucketOf(t, engine.manifest.buckets)
+  private def single(t: (String, String)) = SearchQuery(Seq(t), 10)
+  private def oracleStats(t: (String, String)): Option[(Long, Long)] =
+    oracle.tfs.get(t).map(m => (m.size.toLong, m.values.map(_.toLong).sum))
+
+  test("term dictionary: a loaded bucket answers present and absent terms with no job") {
+    val e = servingEngine()
+    val first = ("text", "error")
+    val b = bucketOf(first._2)
+    val other = oracle.tfs.keys.toSeq.sorted.find { case (f, t) => f == "text" && t != first._2 && bucketOf(t) == b }.get
+    val absent = Iterator.from(0).map(i => ("text", s"zzzabsent$i")).find(t => bucketOf(t._2) == b).get
+    assert(jobsOf(e.topK(single(first)).collect()) >= 1) // loads bucket b (and the norms)
+    var got: Map[(String, String), (Long, Long)] = null
+    assert(jobsOf { got = e.termStatsOf(single(other)) } == 0, s"present $other in loaded bucket $b")
+    assert(got == oracleStats(other).map(other -> _).toMap)
+    assert(jobsOf { got = e.termStatsOf(single(absent)) } == 0, s"absent $absent in loaded bucket $b")
+    assert(got.isEmpty)
+    // a new key whose terms are all resident: the kernel job only
+    var hits: Seq[(Long, Double)] = Nil
+    assert(jobsOf { hits = e.topK(single(other)).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq } == 1)
+    assert(hits == Bm25Oracle.topK(oracle, single(other)))
+  }
+
+  test("term dictionary: single-term termStatsOf == the termstats table, one job per bucket at most") {
+    val e = servingEngine()
+    val rows = spark.read.parquet(s"$indexDir/termstats").select("field", "term", "df", "pv").collect()
+      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
+    assert(rows.length == oracle.tfs.size)
+    val jobs = jobsOf(rows.foreach { case (t, dfPv) =>
+      assert(e.termStatsOf(single(t)) == Map(t -> dfPv), s"$t")
+    })
+    // + 1: the engine's first termstats touch infers the table's schema
+    assert(jobs <= e.manifest.buckets + 1, s"$jobs termstats jobs for ${e.manifest.buckets} buckets")
+  }
+
+  /** (field, term) rows in `t`'s termstats bucket. */
+  private def bucketRows(t: (String, String)): Int = oracle.tfs.keys.count(k => bucketOf(k._2) == bucketOf(t._2))
+
+  test("term dictionary: a load past the entry cap clears it wholesale, the query keeps its terms") {
+    val e = servingEngine()
+    val a = ("text", "error")
+    val b = oracle.tfs.keys.toSeq.sorted.find { case (f, t) => f == "text" && bucketOf(t) != bucketOf(a._2) }.get
+    def exp(ts: (String, String)*) = ts.map(t => t -> oracleStats(t).get).toMap
+    def lookup(max: Int, ts: (String, String)*) = e.dictionaryLookup(ts, max, Long.MaxValue)
+    assert(lookup(Int.MaxValue, a) == exp(a)) // a's bucket, + the schema inference job
+    // room for either bucket, not both: publishing b's clears a's, yet the
+    // result still holds a, read from the bucket map taken before the clear
+    val cap = math.max(bucketRows(a), bucketRows(b))
+    assert(bucketRows(a) + bucketRows(b) > cap)
+    assert(jobsOf(assert(lookup(cap, a, b) == exp(a, b))) == 1)
+    assert(jobsOf(assert(lookup(Int.MaxValue, b) == exp(b))) == 0, "b's bucket stays")
+    assert(jobsOf(assert(lookup(Int.MaxValue, a) == exp(a))) == 1, "a's bucket was cleared")
+  }
+
+  test("term dictionary: a bucket past either cap never becomes resident, its stats stay exact") {
+    val e = servingEngine()
+    val a = ("text", "error")
+    assert(e.dictionaryLookup(Seq(a), Int.MaxValue, Long.MaxValue) == Map(a -> oracleStats(a).get))
+    val c = oracle.tfs.keys.toSeq.sorted.find { case (f, t) => f == "text" && bucketOf(t) != bucketOf(a._2) }.get
+    val absent = Iterator.from(0).map(i => ("text", s"zzzabsent$i")).find(t => bucketOf(t._2) == bucketOf(c._2)).get
+    val exp = Map(c -> oracleStats(c).get)
+    // entry cap below the bucket's row count: loaded whole, served, not kept
+    for (_ <- 1 to 2) assert(jobsOf(assert(e.dictionaryLookup(Seq(c, absent), bucketRows(c) - 1, Long.MaxValue) == exp)) == 1)
+    // byte cap below the bucket's files: read by term pushdown, not kept
+    for (_ <- 1 to 2) assert(jobsOf(assert(e.dictionaryLookup(Seq(c, absent), Int.MaxValue, 0L) == exp)) == 1)
+    // neither evicted the resident bucket
+    assert(jobsOf(assert(e.dictionaryLookup(Seq(a), Int.MaxValue, Long.MaxValue) == Map(a -> oracleStats(a).get))) == 0)
+  }
+
   test("property: random AND queries, topK and matchCount == oracle on both norms paths") {
     // terms come from the index's own vocabulary: the 40 most frequent text
     // terms (so 2-4 term ANDs often intersect), any text term, every tool
@@ -241,9 +356,7 @@ class EndToEndSpec extends SparkFunSuite {
       k <- Gen.oneOf(1, 10, 100)
     } yield SearchQuery(terms.distinct, k)
 
-    val prop = "graft.norms.cache.max.bytes"
-    sys.props(prop) = "0"
-    val distEngine = try new QueryEngine(spark, indexDir) finally sys.props.remove(prop)
+    val distEngine = distributedEngine()
     def bits(hits: Seq[(Long, Double)]) = hits.map { case (d, s) => (d, java.lang.Double.doubleToRawLongBits(s)) }
     var multiTermHits = 0
     val property = Prop.forAllNoShrink(query) { q =>
