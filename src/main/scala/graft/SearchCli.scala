@@ -58,17 +58,21 @@ object SearchCli {
       }
 
     case "explain" :: dir :: kw :: _ =>
-      // show the physical plan of the top-k query (bucket partition pruning,
-      // term pushdown, the chunk exchange, the top-k tree-reduce), then run
-      // it profiled so the block-max benefit is a measured number, not an
-      // inference: postings/blocks bypassed undecoded vs decoded vs scored
+      // the top-k query is one task per chunk range, each reading its
+      // range's posting files of the query's buckets: list them, then run
+      // the query profiled so the block-max benefit is a measured number,
+      // not an inference: postings/blocks bypassed undecoded vs decoded vs
+      // scored
       val pairs = kw.split(',').toSeq.map { p =>
         val Array(f, t) = p.split(":", 2)
         (f, Seq(t))
       }
       val q = SearchQuery.of(pairs, 10)
       val engine = new QueryEngine(spark, dir)
-      engine.topK(q).explain("formatted")
+      println(s"query terms=${q.terms.mkString(" AND ")}: ${engine.manifest.ranges} chunk ranges in the index")
+      engine.rangeFiles(q.terms).foreach { case (r, files) =>
+        println(s"[range $r] " + files.map(f => s"${f.toPath} (${f.length} B)").mkString(", "))
+      }
       val (hits, kstats) = engine.topKProfiled(q)
       println(s"[kernel] hits=${hits.length} " +
         kstats.toSeq.sortBy(_._1).map { case (k0, v) => s"$k0=$v" }.mkString(" "))

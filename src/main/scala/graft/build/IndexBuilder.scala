@@ -3,6 +3,7 @@ package graft.build
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.analyze.{Analyzer, Analyzers}
@@ -22,6 +23,11 @@ import graft.query.Bm25
   *    so a stopword term at 10^12 turns becomes many parallel chunks instead
   *    of one 10^12-entry group (the reference instead CAPS lists at 1e6 and
   *    loses recall, ReduceGroupData.java:104-128 — we keep recall).
+  *  - the chunks fall into `ranges` contiguous runs (range = chunk *
+  *    ranges / numChunks). Postings are partitioned by (bucket, range) and
+  *    norms by range, so one query task reads exactly its range's files of
+  *    the query's buckets — no chunk shuffle (the Jigsaw idea: lay the data
+  *    out to match the access unit).
   *  - docstore = plain columnar Parquet sorted by docId (rowgroup min/max
   *    prune hit fetches); replaces DocGz blocks + DocGzMeta KV
   *    (poseidon_if.proto:9-17).
@@ -47,13 +53,30 @@ final case class IndexManifest(
     buckets: Int,
     chunkDocs: Long,
     blockSize: Int,
+    /** Chunk ranges: min(chunk count, the building session's shuffle
+      * partitions); 0 in a manifest of a layout before v5. */
+    ranges: Int,
     avgdl: Map[String, Double])
 
 object IndexBuilder {
 
   /** Bumped on any change to the on-disk index layout; stamped into buildId
     * so cached indexes from older code are detected as stale. */
-  val LayoutVersion = 4
+  val LayoutVersion = 5
+
+  /** On-disk schemas, data columns then partition columns. Readers pass them
+    * instead of inferring one, which costs a Spark job per table. */
+  val PostingsSchema: StructType = new StructType()
+    .add("field", StringType).add("term", StringType).add("chunk", LongType)
+    .add("dfChunk", LongType).add("blob", BinaryType)
+    .add("bucket", IntegerType).add("range", IntegerType)
+  val NormsSchema: StructType = new StructType()
+    .add("field", StringType).add("chunk", LongType).add("blob", BinaryType)
+    .add("sum_dl", LongType).add("n_docs", LongType)
+    .add("range", IntegerType)
+  val TermstatsSchema: StructType = new StructType()
+    .add("field", StringType).add("term", StringType).add("df", LongType).add("pv", LongType)
+    .add("bucket", IntegerType)
 
   /** Term -> shard bucket: murmur3(seed 42), the same dispersion family the
     * reference uses for its HashId (LogParser.java:26-31, util/MurmurHash3
@@ -189,7 +212,15 @@ object IndexBuilder {
     // must invalidate resume, not silently reuse old postings
     val cfgHash = (fields.map(f => s"$f=${analyzers(f).spec}").mkString(";").hashCode
       & 0x7fffffff).toHexString
-    val buildId = f"build-v${IndexBuilder.LayoutVersion}%d-${numDocs}%d-${cfg.buckets}%d-${cfg.chunkDocs}%d-$cfgHash%s"
+    // the query's unit of work: min(chunk count, shuffle partitions) ranges,
+    // the size the chunk shuffle used to take at query time. Part of the id,
+    // so a resume under another partition count cannot mix range layouts.
+    val numChunks = math.max(1L, (numDocs + cfg.chunkDocs - 1) / cfg.chunkDocs)
+    val ranges = math.min(numChunks, spark.sessionState.conf.numShufflePartitions.toLong).toInt
+    // range of the `chunk` column: `ranges` contiguous runs of the chunks,
+    // in chunk order (integral division, exact)
+    val rangeOfChunk = expr(s"CAST((chunk * $ranges) div $numChunks AS INT)")
+    val buildId = f"build-v${IndexBuilder.LayoutVersion}%d-${numDocs}%d-${cfg.buckets}%d-${cfg.chunkDocs}%d-$ranges%d-$cfgHash%s"
 
     // Resume gate: everything under `dir` is trusted ONLY if it was produced
     // by this exact buildId (layout version + corpus size + config). A
@@ -243,11 +274,12 @@ object IndexBuilder {
           (field, chunk, graft.codec.PostingCodec.encodeNorms(arr), sumDl, entries.length.toLong)
         }
         .toDF("field", "chunk", "blob", "sum_dl", "n_docs")
-        .write.mode("overwrite").parquet(s"$dir/norms")
+        .withColumn("range", rangeOfChunk)
+        .write.mode("overwrite").partitionBy("range").parquet(s"$dir/norms")
     }
     phase("norms")
     // avgdl over ALL docs (zero-token docs included), from the norms stats
-    val avgdl = spark.read.parquet(s"$dir/norms")
+    val avgdl = spark.read.schema(NormsSchema).parquet(s"$dir/norms")
       .groupBy("field").agg(sum("sum_dl").as("s"), sum("n_docs").as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1).toDouble / r.getLong(2).toDouble)
       .toMap
@@ -333,13 +365,17 @@ object IndexBuilder {
       val done = new Path(manifestDir, s"group-$g.json")
       if (!fs.exists(done)) {
         val t0 = System.nanoTime()
-        // partition by (bucket, chunk): write parallelism = buckets x chunks
-        // instead of capping at #buckets, while files-per-bucket-dir stays
-        // bounded by the day's chunk count
+        // each (bucket, range) directory's rows go to one task, so it gets
+        // one file, in (field, term, chunk) order so a term's row groups
+        // stay contiguous for the query's term pushdown. The sort leads with
+        // the partition columns, so the writer keeps it: given any other
+        // order the writer sorts by the partition columns itself, which in
+        // layout v4 undid the (field, term, chunk) order.
         val part = postingRows.filter(col("bucket") % groups === g)
-          .repartition(col("bucket"), col("chunk"))
-          .sortWithinPartitions("field", "term", "chunk")
-        part.write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/postings")
+          .withColumn("range", rangeOfChunk)
+          .repartition(col("bucket"), col("range"))
+          .sortWithinPartitions("bucket", "range", "field", "term", "chunk")
+        part.write.mode("overwrite").partitionBy("bucket", "range").parquet(s"$dir/postings")
         phase(s"postings_g$g")
         stats.filter(col("bucket") % groups === g)
           .repartition(col("bucket")) // one task per bucket dir: files stay
@@ -358,7 +394,7 @@ object IndexBuilder {
       }
     }
 
-    val manifest = IndexManifest(buildId, numDocs, cfg.buckets, cfg.chunkDocs, cfg.blockSize, avgdl)
+    val manifest = IndexManifest(buildId, numDocs, cfg.buckets, cfg.chunkDocs, cfg.blockSize, ranges, avgdl)
     writeManifest(fs, new Path(manifestDir, "core.json"), manifest, phasesMs.toSeq)
     groupedRaw.unpersist(); stats.unpersist(); sortedHandle.unpersist()
     manifest
@@ -372,7 +408,7 @@ object IndexBuilder {
     val avg = m.avgdl.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val phases = phasesMs.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val json =
-      s"""{"buildId":"${m.buildId}","numDocs":${m.numDocs},"buckets":${m.buckets},"chunkDocs":${m.chunkDocs},"blockSize":${m.blockSize},"avgdl":$avg,"phasesMs":$phases}"""
+      s"""{"buildId":"${m.buildId}","numDocs":${m.numDocs},"buckets":${m.buckets},"chunkDocs":${m.chunkDocs},"blockSize":${m.blockSize},"ranges":${m.ranges},"avgdl":$avg,"phasesMs":$phases}"""
     val tmp = new Path(p.getParent, "." + p.getName + ".tmp")
     val out = fs.create(tmp, true)
     out.write(json.getBytes("UTF-8"))
@@ -389,13 +425,14 @@ object IndexBuilder {
     in.readFully(bytes)
     in.close()
     val s = new String(bytes, "UTF-8")
-    def longOf(k: String): Long = s"""\"$k\":(\\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
+    def longOpt(k: String): Option[Long] = s"""\"$k\":(\\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
+    def longOf(k: String): Long = longOpt(k).get
     def strOf(k: String): String = (s"""\"$k\":\"([^\"]*)\"""").r.findFirstMatchIn(s).get.group(1)
     // the avgdl object only: keys written after it (phasesMs) are not fields
     val avgFrom = s.indexOf("\"avgdl\":") + 8
     val avg = """"(\w+)":([0-9.Ee+-]+)""".r.findAllMatchIn(
       s.substring(avgFrom, s.indexOf('}', avgFrom))).map(m => m.group(1) -> m.group(2).toDouble).toMap
     IndexManifest(strOf("buildId"), longOf("numDocs"), longOf("buckets").toInt,
-      longOf("chunkDocs"), longOf("blockSize").toInt, avg)
+      longOf("chunkDocs"), longOf("blockSize").toInt, longOpt("ranges").getOrElse(0L).toInt, avg)
   }
 }

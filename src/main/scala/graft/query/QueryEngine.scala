@@ -2,9 +2,20 @@ package graft.query
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, FileScanRDD, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{And, EqualTo, Filter, Or}
+import org.apache.spark.sql.types.StructType
 
 import graft.analyze.Analyzers
 import graft.build.IndexBuilder
@@ -59,34 +70,38 @@ final case class SearchStats(total: Long, pv: Long, uv: Long)
   *     bucket not loaded yet loads whole, once per engine (bucket-pruned
   *     scan, one job for all of a query's missing buckets; a bucket past
   *     the size cap gives only the query's terms and stays out)
-  *   postings scan (bucket-pruned, term-filtered)                 \
-  *     -> shuffle by chunk (only the query terms' postings move)   } job 1
-  *     -> per-chunk conjunctive DAAT + block-max skip -> local k  /
-  *     -> global top-k (TakeOrderedAndProject tree-reduce)
+  *   one task per chunk range: read the range's posting files of the   \
+  *     query's buckets (term pushdown, rows re-checked), group by chunk  } job 1,
+  *     -> per-chunk conjunctive DAAT + block-max skip -> local k         } 1 stage
+  *     -> global top-k (TakeOrderedAndProject over the RDD scan)        /
   *   docstore fetch: docId IN (collected hits) pushdown + score    — job 2
   *     looked up from the collected pairs; one scan, no exchange
   *
-  * The kernel needs each chunk's doc lengths (the norms sidecar). A small
-  * sidecar is one broadcast map per engine, looked up inside the kernel
-  * task; a large one rides the chunk shuffle (see [[normsLocal]]).
+  * The index lays postings out by (bucket, chunk range) (see
+  * [[IndexBuilder]]), so no exchange is needed to bring a chunk's rows
+  * together. The kernel needs each chunk's doc lengths (the norms sidecar):
+  * a small sidecar is one broadcast map per engine, a large one is read by
+  * the task from its range's norms files (see [[normsLocal]]).
   *
   * Replaces the reference's searcher/meta/hdfsreader HTTP fan-out
-  * (inverted_index_gz_client.go:152-202, doc_gz_client.go:118-232) with
-  * at most two exchanges (one with broadcast norms, none in the fetch).
+  * (inverted_index_gz_client.go:152-202, doc_gz_client.go:118-232), which
+  * likewise reads each term's segment and intersects in place, with no
+  * exchange in any query.
   */
 class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable {
 
   val manifest = IndexBuilder.readManifest(spark, dir)
-  require(manifest.buildId.startsWith(s"build-v${IndexBuilder.LayoutVersion}-"),
-    s"index at $dir has layout '${manifest.buildId}', this reader needs " +
-      s"layout v${IndexBuilder.LayoutVersion} — rebuild the index")
+  private val layout = """^build-v(\d+)-""".r.findFirstMatchIn(manifest.buildId).map(_.group(1))
+  require(layout.contains(IndexBuilder.LayoutVersion.toString),
+    s"index at $dir has layout ${layout.fold("unknown")("v" + _)} (buildId '${manifest.buildId}'), " +
+      s"this reader needs layout v${IndexBuilder.LayoutVersion} — rebuild the index")
 
-  // lazy vals: parquet file listings + schema inference happen once per
-  // engine, not once per query (repeated interactive queries hit the cached
-  // relation; partition pruning still applies per filter)
-  private lazy val postings: DataFrame = spark.read.parquet(s"$dir/postings")
-  private lazy val termstats: DataFrame = spark.read.parquet(s"$dir/termstats")
-  private lazy val norms: DataFrame = spark.read.parquet(s"$dir/norms")
+  // lazy vals: parquet file listings happen once per engine, not once per
+  // query. The index schemas are known, so no schema-inference job runs;
+  // the docstore's columns come from the input and are inferred.
+  private lazy val termstats: DataFrame =
+    spark.read.schema(IndexBuilder.TermstatsSchema).parquet(s"$dir/termstats")
+  private lazy val norms: DataFrame = spark.read.schema(IndexBuilder.NormsSchema).parquet(s"$dir/norms")
   lazy val docstore: DataFrame = spark.read.parquet(s"$dir/docstore")
 
   // resident term dictionary: termstats bucket -> every (field, term) ->
@@ -146,24 +161,67 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
   /** Serving fast path for the norms sidecar: when it is small
     * (interactive-scale index), collect it once per engine into one
     * broadcast (field, chunk) -> blob map. Plans then carry only the
-    * broadcast handle and each kernel task looks up its chunk's rows, so a
-    * query runs no norms scan, semi-join or norms shuffle (the scan and
-    * semi-join were measured ~80 ms of the ~250 ms interactive floor). Above
-    * the size cap (or on non-local storage) [[candidates]] keeps the
-    * distributed 100 TB shape: norms pruned to the chunks that hold
-    * postings, shipped through the chunk shuffle. */
+    * broadcast handle and each kernel task looks up its chunks' rows. Above
+    * the size cap (or on non-local storage) each task reads its own range's
+    * norms files instead (see [[perChunk]]). Both paths stay: a task-side
+    * read on every query measured 57 -> 71 ms topK p50 against the
+    * broadcast at perfbench size (ROADMAP item 1). */
   private val NormsCacheMaxBytes = // sys-prop override so specs cover BOTH paths
     sys.props.get("graft.norms.cache.max.bytes").map(_.toLong).getOrElse(64L << 20)
   private lazy val normsLocal: Option[Broadcast[Map[(String, Long), Array[Byte]]]] = {
     val normsDir = new java.io.File(dir, "norms")
-    // non-local paths (hdfs:// etc.) fail exists() -> distributed path
+    // non-local paths (hdfs:// etc.) fail exists() -> task-side reads
     if (!normsDir.exists() || graft.FsUtil.dirSize(normsDir) > NormsCacheMaxBytes) None
     else Some(spark.sparkContext.broadcast(norms.select("field", "chunk", "blob").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getAs[Array[Byte]](2)).toMap))
   }
 
-  /** Bucket partition pruning plus term pushdown for `terms` — postings and
-    * termstats share the (bucket, field, term) layout. */
+  /** The parquet files of one directory of the index, as scan splits (one
+    * whole file each); none when the directory is absent. */
+  private def parquetFiles(path: String): Array[PartitionedFile] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Array.empty
+    else fs.listStatus(p)
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+      .map(st => PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), 0L, st.getLen,
+        Array.empty[String], st.getModificationTime, st.getLen))
+  }
+
+  // posting files per bucket, by range: listed on a bucket's first query
+  private val postingFiles = new ConcurrentHashMap[Int, Array[Array[PartitionedFile]]]()
+
+  /** (range, posting files) for every range holding files of the query
+    * terms' buckets, in range order. */
+  private[graft] def rangeFiles(terms: Seq[(String, String)]): Seq[(Int, Array[PartitionedFile])] = {
+    val buckets = terms.map { case (_, t) => IndexBuilder.bucketOf(t, manifest.buckets) }.distinct.sorted
+    val byBucket = buckets.map(b => postingFiles.computeIfAbsent(b,
+      _ => Array.tabulate(manifest.ranges)(r => parquetFiles(s"$dir/postings/bucket=$b/range=$r"))))
+    (0 until manifest.ranges).map(r => r -> byBucket.flatMap(_(r)).toArray).filter(_._2.nonEmpty)
+  }
+
+  /** A parquet reader of whole files with `required` columns, `filters`
+    * pushed down to row groups. A fresh hadoop conf each: the format writes
+    * the read schema into it. */
+  private def parquetReader(data: StructType, required: StructType, filters: Seq[Filter])
+      : PartitionedFile => Iterator[InternalRow] =
+    new ParquetFileFormat().buildReaderWithPartitionValues(spark, data, new StructType(), required, filters,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
+
+  private val PostingsRead = new StructType(IndexBuilder.PostingsSchema.fields.filter(f =>
+    Set("field", "term", "chunk", "blob").contains(f.name)))
+
+  // the task-side norms source: each range's norms files and one reader,
+  // built once per engine
+  private lazy val normsFiles: Array[Array[PartitionedFile]] =
+    Array.tabulate(manifest.ranges)(r => parquetFiles(s"$dir/norms/range=$r"))
+  private lazy val normsReader: PartitionedFile => Iterator[InternalRow] = {
+    val data = new StructType(IndexBuilder.NormsSchema.fields.filterNot(_.name == "range"))
+    parquetReader(data, new StructType(data.fields.take(3)), Nil) // field, chunk, blob
+  }
+
+  /** Bucket partition pruning plus term pushdown for `terms` in termstats. */
   private def termFilter(terms: Seq[(String, String)]): Column = {
     val buckets = terms.map { case (_, t) => IndexBuilder.bucketOf(t, manifest.buckets) }.distinct
     col("bucket").isin(buckets: _*) &&
@@ -293,8 +351,8 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     * pages always fill while scores stay exact. The docstore join is
     * planner-chosen (broadcast only when the hit set is actually small). */
   def fetchFiltered(q: SearchQuery, predicate: Column): DataFrame =
-    // the scoring subtree is the expensive plan (posting scan + chunk
-    // shuffle) and is k- and predicate-independent — cache it; the per-call
+    // the scoring subtree (the per-range posting read and kernel) is k- and
+    // predicate-independent — cache it; the per-call
     // join/filter/limit on top is cheap to re-plan
     memo(scoreAllCache, PlanCacheMaxEntries, q.terms)(scoreAll(q))
       .join(docstore, Seq("docId"))
@@ -304,23 +362,24 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
 
   /** Count of the AND intersection — the reference's pv/uv stats path needs
     * only a count, so this skips scoring, norms, and the top-k heap entirely
-    * (a count-only kernel instead of candidates(q, MaxValue)). */
+    * (a count-only kernel instead of candidates(q, MaxValue)); the per-chunk
+    * counts sum in the same job, with no aggregate exchange. */
   def matchCount(q: SearchQuery): Long = memo(countCache, CountCacheMaxEntries, q.terms) {
-    import spark.implicits._
     val ts = termStatsOf(q)
     val n =
       if (q.terms.isEmpty || q.terms.exists(t => !ts.contains(t))) 0L
       else if (q.terms.size == 1) ts(q.terms.head)._1 // df IS the count
       else {
         val terms = q.terms.toArray
-        perChunk(q.terms)((_, rows) => Iterator(QueryKernel.countChunk(terms, rows)))
-          .toDF("n").agg(sum("n")).collect()(0).getLong(0)
+        perChunk(q.terms)((_, rows) => Iterator(QueryKernel.countChunk(terms, rows))).fold(0L)(_ + _)
       }
     Long.box(n)
   }
 
   /** All docIds matching the AND conjunction, ascending (the reference's
-    * unranked result order, doc_gz_client.go:101-103). */
+    * unranked result order, doc_gz_client.go:101-103): each partition is one
+    * chunk range, in range order, walked in chunk order, so sorting within
+    * partitions orders the whole result with no exchange. */
   def matchingDocIds(q: SearchQuery): DataFrame = {
     import spark.implicits._
     val ts = termStatsOf(q)
@@ -328,7 +387,8 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
       return spark.emptyDataset[Long].toDF("docid")
     val terms = q.terms.toArray
     // the count kernel's walk, emitting docIds: no norms, scoring or heap
-    perChunk(q.terms)((_, rows) => QueryKernel.matchChunk(terms, rows)).toDF("docid").orderBy("docid")
+    spark.createDataset(perChunk(q.terms)((_, rows) => QueryKernel.matchChunk(terms, rows)))
+      .toDF("docid").sortWithinPartitions("docid")
   }
 
   /** Exact BM25 scores for EVERY matching doc (no top-k cut). */
@@ -356,58 +416,53 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     val terms = q.terms.toArray
     val idfs = terms.map { case (f, t) => Bm25.idf(manifest.numDocs, ts((f, t))._1) }
     val avgdls = terms.map { case (f, _) => manifest.avgdl(f) }
-    val fields = q.terms.map(_._1).distinct
     val chunkDocs = manifest.chunkDocs
-    val normsB = normsLocal
-    // without the broadcast, the query fields' norms ride the chunk shuffle
-    // under a sentinel term, pruned by a semi-join on the (tiny) distinct
-    // set of chunks that hold postings
-    val withNorms: DataFrame => DataFrame =
-      if (normsB.isDefined) identity
-      else prows => prows.unionAll(norms
-        .filter(col("field").isin(fields: _*))
-        .join(prows.select("chunk").distinct(), Seq("chunk"), "left_semi")
-        .select(col("field"), lit(QueryKernel.NormsTerm).as("term"), col("chunk"), col("blob")))
-    perChunk(q.terms, withNorms) { (chunk, rows) =>
-      val normRows = normsB.iterator.flatMap(b => fields.flatMap(f =>
-        b.value.get((f, chunk)).map(blob => (f, QueryKernel.NormsTerm, blob))))
-      QueryKernel.scoreChunk(terms, idfs, avgdls, chunk * chunkDocs, localK, rows ++ normRows, tel)
-    }
+    spark.createDataset(perChunk(q.terms, withNorms = true) { (chunk, rows) =>
+      QueryKernel.scoreChunk(terms, idfs, avgdls, chunk * chunkDocs, localK, rows, tel)
+    })
   }
 
-  /** The one posting scan + chunk shuffle behind every conjunctive query:
-    * the terms' postings (bucket-pruned, term-filtered), plus what `addRows`
-    * unions onto them, are repartitioned and sorted by chunk, and each chunk's
-    * (field, term, blob) rows go to `kernel` as one group. The shuffle is
-    * sized to the REAL key space, min(chunk count, shuffle partitions): a
-    * short query over a small index runs 1-2 tasks instead of
-    * spark.sql.shuffle.partitions mostly-empty ones (measured ~1.5x lower
-    * latency); at scale it saturates at the session parallelism. */
-  private def perChunk[T: Encoder](terms: Seq[(String, String)],
-                                   addRows: DataFrame => DataFrame = identity)(
-      kernel: (Long, Iterator[(String, String, Array[Byte])]) => Iterator[T]): Dataset[T] = {
-    import spark.implicits._
-    val prows = postings.filter(termFilter(terms)).select("field", "term", "chunk", "blob")
-    val numChunks = math.max(1L, (manifest.numDocs + manifest.chunkDocs - 1) / manifest.chunkDocs)
-    val p = math.min(numChunks, spark.sessionState.conf.numShufflePartitions.toLong).toInt
-    addRows(prows).as[(String, String, Long, Array[Byte])]
-      .repartition(p, col("chunk"))
-      .sortWithinPartitions("chunk")
-      .mapPartitions { it =>
-        // stream consecutive same-chunk runs into the kernel
-        val buf = it.buffered
-        new Iterator[Iterator[T]] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): Iterator[T] = {
-            val chunk = buf.head._3
-            val group = scala.collection.mutable.ArrayBuffer[(String, String, Array[Byte])]()
-            while (buf.hasNext && buf.head._3 == chunk) {
-              val r = buf.next(); group += ((r._1, r._2, r._4))
-            }
-            kernel(chunk, group.iterator)
-          }
-        }.flatten
+  /** The one posting read behind every conjunctive query, as ONE stage: a
+    * task per chunk range reads that range's posting files of the terms'
+    * buckets (a `FileScanRDD`; the (field, term) pairs pushed down prune row
+    * groups, so each row is checked again), groups the rows by chunk, and
+    * hands each chunk's (field, term, blob) rows to `kernel`, in chunk
+    * order. With `withNorms` the rows also carry the query fields' norms
+    * blobs for the chunk under [[QueryKernel.NormsTerm]]: from the
+    * broadcast map, else read from the range's norms files. */
+  private def perChunk[T: ClassTag](terms: Seq[(String, String)], withNorms: Boolean = false)(
+      kernel: (Long, Iterator[(String, String, Array[Byte])]) => Iterator[T]): RDD[T] = {
+    val ranges = rangeFiles(terms)
+    val rangeOf = ranges.map(_._1).toArray
+    val wanted = terms.toSet
+    val fields = terms.map(_._1).distinct
+    val pushed: Filter = terms.map { case (f, t) => And(EqualTo("field", f), EqualTo("term", t)): Filter }.reduce(Or)
+    // (range, chunks) -> the (field, chunk) -> norms blob lookup
+    val normsOf: (Int, collection.Set[Long]) => collection.Map[(String, Long), Array[Byte]] =
+      if (!withNorms) (_, _) => Map.empty
+      else normsLocal match {
+        case Some(b) => (_, _) => b.value
+        case None =>
+          val (files, read) = (normsFiles, normsReader)
+          (r, chunks) => files(r).iterator.flatMap(read)
+            .filter(row => chunks.contains(row.getLong(1)) && fields.contains(row.getUTF8String(0).toString))
+            .map(row => (row.getUTF8String(0).toString, row.getLong(1)) -> row.getBinary(2)).toMap
       }
+    val scan = new FileScanRDD(spark, parquetReader(PostingsRead, PostingsRead, Seq(pushed)),
+      ranges.zipWithIndex.map { case ((_, files), i) => FilePartition(i, files) }, PostingsRead)
+    scan.mapPartitionsWithIndex { (i, rows) =>
+      val byChunk = scala.collection.mutable.TreeMap[Long, ArrayBuffer[(String, String, Array[Byte])]]()
+      rows.foreach { row =>
+        val key = (row.getUTF8String(0).toString, row.getUTF8String(1).toString)
+        if (wanted.contains(key))
+          byChunk.getOrElseUpdate(row.getLong(2), ArrayBuffer()) += ((key._1, key._2, row.getBinary(3)))
+      }
+      val normsBlobs = if (byChunk.isEmpty) Map.empty[(String, Long), Array[Byte]] else normsOf(rangeOf(i), byChunk.keySet)
+      byChunk.iterator.flatMap { case (chunk, group) =>
+        val normRows = fields.flatMap(f => normsBlobs.get((f, chunk)).map(blob => (f, QueryKernel.NormsTerm, blob)))
+        kernel(chunk, group.iterator ++ normRows)
+      }
+    }
   }
 }
 
@@ -436,7 +491,7 @@ class MultiDayEngine(spark: SparkSession, dayDirs: Seq[(String, String)]) {
       .reduce((a, b) => SearchStats(a.total + b.total, a.pv + b.pv, a.uv + b.uv))
 }
 
-/** The per-chunk scoring kernel — runs inside executors (mapGroups), plain
+/** The per-chunk scoring kernel — runs inside the range tasks, plain
   * Scala over posting cursors; deliberately outside codegen (SURVEY.md §4 R12).
   */
 object QueryKernel extends Serializable {
@@ -466,7 +521,7 @@ object QueryKernel extends Serializable {
       spark.sparkContext.longAccumulator("graft.kernel.blocksSkipped"))
   }
 
-  /** Sentinel term carrying a chunk's norms blob through the shuffle. */
+  /** Sentinel term carrying a chunk's norms blob among its posting rows. */
   val NormsTerm = "\u0000norms"
 
   /** One chunk's conjunction walk, shared by [[foreachMatch]] and

@@ -45,8 +45,9 @@ class EndToEndSpec extends SparkFunSuite {
     "q09_role" -> SearchQuery.of(Seq("role" -> Seq("tool"), "text" -> Seq("fail")), 15),
     "q10_dup_terms" -> SearchQuery.of(Seq("text" -> Seq("error", "error", "retry")), 10))
 
-  /** A fresh engine on the distributed norms path (a norms cache cap of 0). */
-  private def distributedEngine(): QueryEngine = {
+  /** A fresh engine on the task-side norms path (a norms cache cap of 0):
+    * each range task reads its own norms files. */
+  private def taskNormsEngine(): QueryEngine = {
     val prop = "graft.norms.cache.max.bytes"
     sys.props(prop) = "0"
     try new QueryEngine(spark, indexDir) finally sys.props.remove(prop)
@@ -57,12 +58,15 @@ class EndToEndSpec extends SparkFunSuite {
   }
 
   test("rank identity: engine top-k docIds AND scores == oracle, exactly") {
-    queries.foreach { case (name, q) =>
-      val expected = Bm25Oracle.topK(oracle, q)
-      val got = engine.topK(q).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(got.map(_._1) == expected.map(_._1), s"$name docIds differ\n got=$got\n exp=$expected")
-      got.zip(expected).foreach { case ((gd, gs), (ed, es)) =>
-        assert(gs == es, s"$name doc $gd/$ed score $gs != $es (exact)")
+    // on both norms paths: the broadcast map and the task-side read
+    Seq("broadcast" -> engine, "task-side norms" -> taskNormsEngine()).foreach { case (path, e) =>
+      queries.foreach { case (name, q) =>
+        val expected = Bm25Oracle.topK(oracle, q)
+        val got = e.topK(q).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(got.map(_._1) == expected.map(_._1), s"$path $name docIds differ\n got=$got\n exp=$expected")
+        got.zip(expected).foreach { case ((gd, gs), (ed, es)) =>
+          assert(gs == es, s"$path $name doc $gd/$ed score $gs != $es (exact)")
+        }
       }
     }
   }
@@ -114,24 +118,6 @@ class EndToEndSpec extends SparkFunSuite {
     } finally pool.shutdownNow()
   }
 
-  test("norms paths agree: broadcast norms == distributed semi-join") {
-    // the serving fast path looks norms up in a broadcast map; the
-    // 100 TB path semi-joins norms to chunks with postings. Same results
-    // required on the full query set (rank identity covers the fast path —
-    // here a size-cap override of 0 forces a fresh engine onto the
-    // distributed path and both are compared directly).
-    val prop = "graft.norms.cache.max.bytes"
-    sys.props(prop) = "0"
-    try {
-      val distEngine = new QueryEngine(spark, indexDir)
-      queries.foreach { case (name, q) =>
-        val fast = engine.topK(q).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val dist = distEngine.topK(q).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        assert(fast == dist, s"$name: fast=$fast dist=$dist")
-      }
-    } finally sys.props.remove(prop)
-  }
-
   test("per-turn text equality: fetched text == generator text for every hit") {
     val q = queries(1)._2 // error AND timeout
     val rows = engine.fetch(q).collect()
@@ -153,11 +139,8 @@ class EndToEndSpec extends SparkFunSuite {
     def check(e: QueryEngine, path: String): Unit = queries.foreach { case (name, q) =>
       assert(pairs(e.fetch(q)) == pairs(e.topK(q)), s"$path $name: fetch != topK")
     }
-    check(engine, "cached norms")
-    val prop = "graft.norms.cache.max.bytes"
-    sys.props(prop) = "0"
-    try check(new QueryEngine(spark, indexDir), "distributed norms")
-    finally sys.props.remove(prop)
+    check(engine, "broadcast")
+    check(taskNormsEngine(), "task-side norms")
   }
 
   test("empty fetch (absent term, k = 0) has the non-empty fetch's columns and types") {
@@ -218,6 +201,24 @@ class EndToEndSpec extends SparkFunSuite {
     val buckets = new java.io.File(s"$indexDir/postings").listFiles()
       .filter(_.getName.startsWith("bucket=")).map(_.getName)
     assert(buckets.nonEmpty && buckets.length <= 8)
+    // 12 chunks of 256 docs over 4 shuffle partitions: 4 contiguous chunk
+    // ranges; postings sit in (bucket, range) directories and norms in
+    // range directories, each row in the range of its chunk
+    val m = engine.manifest
+    val numChunks = (N + m.chunkDocs - 1) / m.chunkDocs
+    assert(m.ranges == 4, s"ranges=${m.ranges}")
+    def rangeOf(chunk: Long): Int = (chunk * m.ranges / numChunks).toInt
+    Seq("postings" -> IndexBuilder.PostingsSchema, "norms" -> IndexBuilder.NormsSchema).foreach { case (t, schema) =>
+      val rows = spark.read.schema(schema).parquet(s"$indexDir/$t").select("chunk", "range").collect()
+      assert(rows.forall(r => r.getInt(1) == rangeOf(r.getLong(0))), t)
+      assert(rows.map(_.getInt(1)).distinct.sorted.toSeq == (0 until m.ranges), t)
+    }
+    // one file per (bucket, range) directory
+    buckets.foreach { b =>
+      new java.io.File(s"$indexDir/postings/$b").listFiles().foreach { r =>
+        assert(r.getName.startsWith("range=") && r.listFiles().count(_.getName.endsWith(".parquet")) == 1, s"$b/$r")
+      }
+    }
     val ds = spark.read.parquet(s"$indexDir/docstore").select("docId").collect().map(_.getLong(0))
     assert(ds.length == N)
     assert(ds.toSeq.sorted == (0L until N))
@@ -243,7 +244,7 @@ class EndToEndSpec extends SparkFunSuite {
     }
     assert(queries.count { case (_, q) => Bm25Oracle.stats(oracle, q).total > 1 } >= 5)
     check(engine, "broadcast")
-    check(distributedEngine(), "semi-join")
+    check(taskNormsEngine(), "task-side norms")
   }
 
   /** A fresh engine on the serving profile (perfbench's and graft.Bench's):
@@ -255,20 +256,27 @@ class EndToEndSpec extends SparkFunSuite {
     new QueryEngine(serve, indexDir)
   }
 
-  /** Spark jobs `f` submits from this thread. */
-  private def jobsOf(f: => Any): Int = {
+  /** (Spark jobs, their stages) `f` submits from this thread. */
+  private def jobsAndStagesOf(f: => Any): (Int, Int) = {
     val sc = spark.sparkContext
     val group = s"e2e-jobs-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          stages.addAndGet(e.stageInfos.size)
+        }
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "counted")
     try { f; ListenerBusDrain.drain(sc) } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-    n.get
+    (jobs.get, stages.get)
   }
+
+  /** Spark jobs `f` submits from this thread. */
+  private def jobsOf(f: => Any): Int = jobsAndStagesOf(f)._1
 
   private def bucketOf(t: String): Int = IndexBuilder.bucketOf(t, engine.manifest.buckets)
   private def single(t: (String, String)) = SearchQuery(Seq(t), 10)
@@ -281,7 +289,7 @@ class EndToEndSpec extends SparkFunSuite {
     val b = bucketOf(first._2)
     val other = oracle.tfs.keys.toSeq.sorted.find { case (f, t) => f == "text" && t != first._2 && bucketOf(t) == b }.get
     val absent = Iterator.from(0).map(i => ("text", s"zzzabsent$i")).find(t => bucketOf(t._2) == b).get
-    assert(jobsOf(e.topK(single(first)).collect()) >= 1) // loads bucket b (and the norms)
+    assert(jobsOf(e.topK(single(first)).collect()) == 3) // loads bucket b, the norms, then the kernel
     var got: Map[(String, String), (Long, Long)] = null
     assert(jobsOf { got = e.termStatsOf(single(other)) } == 0, s"present $other in loaded bucket $b")
     assert(got == oracleStats(other).map(other -> _).toMap)
@@ -298,11 +306,39 @@ class EndToEndSpec extends SparkFunSuite {
     val rows = spark.read.parquet(s"$indexDir/termstats").select("field", "term", "df", "pv").collect()
       .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
     assert(rows.length == oracle.tfs.size)
-    val jobs = jobsOf(rows.foreach { case (t, dfPv) =>
+    // the engine knows the termstats schema: its first load is one job, with
+    // no schema inference before it
+    val first = jobsOf(assert(e.termStatsOf(single(rows.head._1)) == Map(rows.head)))
+    assert(first == 1, s"$first jobs for a fresh engine's first dictionary load")
+    val jobs = first + jobsOf(rows.foreach { case (t, dfPv) =>
       assert(e.termStatsOf(single(t)) == Map(t -> dfPv), s"$t")
     })
-    // + 1: the engine's first termstats touch infers the table's schema
-    assert(jobs <= e.manifest.buckets + 1, s"$jobs termstats jobs for ${e.manifest.buckets} buckets")
+    assert(jobs <= e.manifest.buckets, s"$jobs termstats jobs for ${e.manifest.buckets} buckets")
+  }
+
+  test("one stage per query: with the dictionary warm, topK and a 2-term searchStats are 1 job of 1 stage") {
+    val e = servingEngine()
+    val q = SearchQuery.of(Seq("text" -> Seq("error", "timeout")), 10)
+    e.termStatsOf(q)
+    e.topK(SearchQuery.of(Seq("text" -> Seq("error")), 10)).collect() // the norms broadcast loads
+    var hits: Seq[(Long, Double)] = Nil
+    assert(jobsAndStagesOf { hits = e.topK(q).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq } == ((1, 1)))
+    assert(hits == Bm25Oracle.topK(oracle, q))
+    var stats: graft.query.SearchStats = null
+    assert(jobsAndStagesOf { stats = e.searchStats(q) } == ((1, 1)))
+    assert(stats == Bm25Oracle.stats(oracle, q) && stats.total > 0)
+  }
+
+  test("layout v5 reader refuses a v4 index with a message naming both layouts") {
+    val dir = SparkSpec.tmpDir("graft-v4")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "_manifest"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_manifest", "core.json"),
+      """{"buildId":"build-v4-3000-8-256-1a2b3c","numDocs":3000,"buckets":8,"chunkDocs":256,"blockSize":32,""" +
+        """"avgdl":{"role":1.0,"text":9.5,"tool":1.0},"phasesMs":{}}""")
+    val e = intercept[IllegalArgumentException](new QueryEngine(spark, dir))
+    Seq("layout v4", s"layout v${IndexBuilder.LayoutVersion}", "rebuild").foreach { s =>
+      assert(e.getMessage.contains(s), e.getMessage)
+    }
   }
 
   /** (field, term) rows in `t`'s termstats bucket. */
@@ -314,7 +350,7 @@ class EndToEndSpec extends SparkFunSuite {
     val b = oracle.tfs.keys.toSeq.sorted.find { case (f, t) => f == "text" && bucketOf(t) != bucketOf(a._2) }.get
     def exp(ts: (String, String)*) = ts.map(t => t -> oracleStats(t).get).toMap
     def lookup(max: Int, ts: (String, String)*) = e.dictionaryLookup(ts, max, Long.MaxValue)
-    assert(lookup(Int.MaxValue, a) == exp(a)) // a's bucket, + the schema inference job
+    assert(lookup(Int.MaxValue, a) == exp(a)) // a's bucket
     // room for either bucket, not both: publishing b's clears a's, yet the
     // result still holds a, read from the bucket map taken before the clear
     val cap = math.max(bucketRows(a), bucketRows(b))
@@ -356,14 +392,14 @@ class EndToEndSpec extends SparkFunSuite {
       k <- Gen.oneOf(1, 10, 100)
     } yield SearchQuery(terms.distinct, k)
 
-    val distEngine = distributedEngine()
+    val taskEngine = taskNormsEngine()
     def bits(hits: Seq[(Long, Double)]) = hits.map { case (d, s) => (d, java.lang.Double.doubleToRawLongBits(s)) }
     var multiTermHits = 0
     val property = Prop.forAllNoShrink(query) { q =>
       val expTop = bits(Bm25Oracle.topK(oracle, q))
       val expCount = Bm25Oracle.stats(oracle, q).total
       if (q.terms.size > 1 && expCount > 0) multiTermHits += 1
-      Seq("broadcast" -> engine, "semi-join" -> distEngine).map { case (path, e) =>
+      Seq("broadcast" -> engine, "task-side norms" -> taskEngine).map { case (path, e) =>
         val got = bits(e.topK(q).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
         (got == expTop) :| s"$path topK $q" && (e.matchCount(q) == expCount) :| s"$path matchCount $q"
       }.reduce(_ && _)

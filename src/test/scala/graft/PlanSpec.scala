@@ -33,12 +33,13 @@ class PlanSpec extends SparkFunSuite {
       s"no partition pruning in:\n$plan")
     assert(plan.contains("PushedFilters") && plan.contains("EqualTo(term,error)"),
       s"term filter not pushed in:\n$plan")
-    // only ONE bucket directory is actually read
+    // only ONE bucket directory is actually read: its range partitions
     val parts = df.queryExecution.executedPlan.collectLeaves().collectFirst {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.selectedPartitions.partitionCount
+        f.selectedPartitions.filePartitionIterator.map(_.values.getInt(0)).toSeq
     }
-    assert(parts.contains(1), s"expected 1 selected partition, got $parts")
+    val ranges = IndexBuilder.readManifest(spark, dir).ranges
+    assert(parts.contains(Seq.fill(ranges)(b)), s"expected bucket $b's $ranges range partitions, got $parts")
   }
 
   test("docstore fetch pushes docId IN-filter to parquet") {
@@ -72,26 +73,34 @@ class PlanSpec extends SparkFunSuite {
     assert(plan.contains("TakeOrderedAndProject"), s"no top-n in:\n$plan")
   }
 
-  test("QueryEngine.topK with broadcast norms: one postings scan, one shuffle") {
-    val q = graft.query.SearchQuery.of(Seq("text" -> Seq("error")), 20)
-    val df = new graft.query.QueryEngine(spark, dir).topK(q)
-    assert(df.collect().nonEmpty)
-    val executed = df.queryExecution.executedPlan
-    val plan = executedPlan(df)
-    // the norms reach the kernel through a broadcast variable: no norms scan,
-    // no local relation in the plan, and only postings cross the chunk shuffle
-    val scans = PlanSpec.collect(executed) {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.relation.location.rootPaths.mkString(",")
+  test("QueryEngine.topK and matchingDocIds: one RDD scan, no shuffle below top-k or sort") {
+    // each chunk range's task reads its own posting files, so neither plan
+    // needs an exchange, on either norms path (broadcast map or task read)
+    val q = graft.query.SearchQuery.of(Seq("text" -> Seq("error", "timeout")), 20)
+    def engine(normsCap: Option[String]) = {
+      val prop = "graft.norms.cache.max.bytes"
+      normsCap.foreach(sys.props(prop) = _)
+      try new graft.query.QueryEngine(spark, dir) finally sys.props.remove(prop)
     }
-    assert(scans.length == 1 && scans.head.endsWith("postings"), s"scans $scans in:\n$plan")
-    val local = PlanSpec.collect(executed) {
-      case l: org.apache.spark.sql.execution.LocalTableScanExec => l.nodeName
+    def check(df: org.apache.spark.sql.DataFrame, top: String, what: String): Unit = {
+      assert(df.collect().nonEmpty, what)
+      val executed = df.queryExecution.executedPlan
+      val plan = executedPlan(df)
+      val shuffles = PlanSpec.collect(executed) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e.outputPartitioning.toString
+      }
+      assert(shuffles.isEmpty, s"$what: shuffles $shuffles in:\n$plan")
+      val scans = PlanSpec.collect(executed) {
+        case _: org.apache.spark.sql.execution.ExternalRDDScanExec[_] => "rdd"
+        case _: org.apache.spark.sql.execution.FileSourceScanExec => "file"
+      }
+      assert(scans == Seq("rdd"), s"$what: scans $scans in:\n$plan")
+      assert(plan.contains(top), s"$what: no $top in:\n$plan")
     }
-    assert(local.isEmpty, s"local relation in:\n$plan")
-    val shuffles = PlanSpec.collect(executed) {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e.outputPartitioning.toString
+    Seq("broadcast" -> engine(None), "task-side norms" -> engine(Some("0"))).foreach { case (path, e) =>
+      check(e.topK(q), "TakeOrderedAndProject", s"$path topK")
+      check(e.matchingDocIds(q), "Sort [docid", s"$path matchingDocIds")
     }
-    assert(shuffles.length == 1, s"shuffles $shuffles in:\n$plan")
   }
 
   test("column pruning: projecting (term) reads only needed columns") {
