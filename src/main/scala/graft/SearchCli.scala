@@ -58,8 +58,8 @@ object SearchCli {
       }
 
     case "explain" :: dir :: kw :: _ =>
-      // the top-k query is one task per chunk range, each reading its
-      // range's posting files of the query's buckets: list them, then run
+      // the top-k query is one task per chunk range, each streaming its
+      // range's posting files of each query term's bucket: list them, then run
       // the query profiled so the block-max benefit is a measured number,
       // not an inference: postings/blocks bypassed undecoded vs decoded vs
       // scored
@@ -71,7 +71,8 @@ object SearchCli {
       val engine = new QueryEngine(spark, dir)
       println(s"query terms=${q.terms.mkString(" AND ")}: ${engine.manifest.ranges} chunk ranges in the index")
       engine.rangeFiles(q.terms).foreach { case (r, files) =>
-        println(s"[range $r] " + files.map(f => s"${f.toPath} (${f.length} B)").mkString(", "))
+        println(s"[range $r] " + files.map { case (i, f) =>
+          s"${q.terms(i)._1}:${q.terms(i)._2} <- ${f.path} (${f.bytes} B)" }.mkString(", "))
       }
       val (hits, kstats) = engine.topKProfiled(q)
       println(s"[kernel] hits=${hits.length} " +

@@ -27,7 +27,12 @@ import graft.query.Bm25
   *    ranges / numChunks). Postings are partitioned by (bucket, range) and
   *    norms by range, so one query task reads exactly its range's files of
   *    the query's buckets — no chunk shuffle (the Jigsaw idea: lay the data
-  *    out to match the access unit).
+  *    out to match the access unit). Each (bucket, range) directory is
+  *    one file sorted by (field, term, chunk) (norms: one file per range,
+  *    (field, chunk)), so the task reads one stream per query term, merges
+  *    them by chunk and holds one chunk at a time, plus each stream's
+  *    current row group: the chunkDocs bound holds for a query task as well
+  *    as for the build.
   *  - docstore = plain columnar Parquet sorted by docId (rowgroup min/max
   *    prune hit fetches); replaces DocGz blocks + DocGzMeta KV
   *    (poseidon_if.proto:9-17).
@@ -275,6 +280,11 @@ object IndexBuilder {
         }
         .toDF("field", "chunk", "blob", "sum_dl", "n_docs")
         .withColumn("range", rangeOfChunk)
+        // one file per range, in (field, chunk) order: the task-side norms
+        // read streams each field's rows chunk-ascending from one file
+        // (partition columns lead the sort, as for the postings below)
+        .repartition(col("range"))
+        .sortWithinPartitions("range", "field", "chunk")
         .write.mode("overwrite").partitionBy("range").parquet(s"$dir/norms")
     }
     phase("norms")
@@ -365,12 +375,17 @@ object IndexBuilder {
       val done = new Path(manifestDir, s"group-$g.json")
       if (!fs.exists(done)) {
         val t0 = System.nanoTime()
-        // each (bucket, range) directory's rows go to one task, so it gets
-        // one file, in (field, term, chunk) order so a term's row groups
-        // stay contiguous for the query's term pushdown. The sort leads with
-        // the partition columns, so the writer keeps it: given any other
-        // order the writer sorts by the partition columns itself, which in
-        // layout v4 undid the (field, term, chunk) order.
+        // one task per (bucket, range) directory, so each holds one file and
+        // a query task reads a term of the range as ONE stream, row group by
+        // row group. Several files per directory would be several streams
+        // open at once, each holding its current row group's pages. Keys
+        // are no fewer than the parallelism: with at least as many chunks as
+        // shuffle partitions there are buckets x partitions of them, else
+        // one chunk per range. The file is in (field, term, chunk) order: the
+        // term's rows are chunk-ascending and its row groups contiguous for
+        // its pushdown. The sort leads with the partition columns, so the
+        // writer keeps it: given any other order the writer re-sorts by the
+        // partition columns alone and the (field, term, chunk) order is lost.
         val part = postingRows.filter(col("bucket") % groups === g)
           .withColumn("range", rangeOfChunk)
           .repartition(col("bucket"), col("range"))

@@ -5,17 +5,25 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, FileScanRDD, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{And, EqualTo, Filter, Or}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.analyze.Analyzers
 import graft.build.IndexBuilder
@@ -70,8 +78,8 @@ final case class SearchStats(total: Long, pv: Long, uv: Long)
   *     bucket not loaded yet loads whole, once per engine (bucket-pruned
   *     scan, one job for all of a query's missing buckets; a bucket past
   *     the size cap gives only the query's terms and stays out)
-  *   one task per chunk range: read the range's posting files of the   \
-  *     query's buckets (term pushdown, rows re-checked), group by chunk  } job 1,
+  *   one task per chunk range: one stream per query term over            \
+  *     its bucket's file (term pushdown, rows re-checked), by chunk      } job 1,
   *     -> per-chunk conjunctive DAAT + block-max skip -> local k         } 1 stage
   *     -> global top-k (TakeOrderedAndProject over the RDD scan)        /
   *   docstore fetch: docId IN (collected hits) pushdown + score    — job 2
@@ -79,9 +87,12 @@ final case class SearchStats(total: Long, pv: Long, uv: Long)
   *
   * The index lays postings out by (bucket, chunk range) (see
   * [[IndexBuilder]]), so no exchange is needed to bring a chunk's rows
-  * together. The kernel needs each chunk's doc lengths (the norms sidecar):
-  * a small sidecar is one broadcast map per engine, a large one is read by
-  * the task from its range's norms files (see [[normsLocal]]).
+  * together, and one (field, term, chunk)-ordered file per (bucket, range)
+  * lets a task hold one chunk's rows at a time, plus one row group per
+  * stream in the parquet reader. The kernel needs each chunk's doc lengths (the
+  * norms sidecar): a small sidecar is one broadcast map per engine, a large
+  * one is streamed by the task from its range's norms files (see
+  * [[normsLocal]]).
   *
   * Replaces the reference's searcher/meta/hdfsreader HTTP fan-out
   * (inverted_index_gz_client.go:152-202, doc_gz_client.go:118-232), which
@@ -176,50 +187,48 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
       .map(r => (r.getString(0), r.getLong(1)) -> r.getAs[Array[Byte]](2)).toMap))
   }
 
-  /** The parquet files of one directory of the index, as scan splits (one
-    * whole file each); none when the directory is absent. */
-  private def parquetFiles(path: String): Array[PartitionedFile] = {
+  /** The parquet files of one directory of the index, by name; none when
+    * the directory is absent. */
+  private def parquetFiles(path: String): Array[QueryEngine.IndexFile] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Array.empty
     else fs.listStatus(p)
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
       .sortBy(_.getPath.getName)
-      .map(st => PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), 0L, st.getLen,
-        Array.empty[String], st.getModificationTime, st.getLen))
+      .map(st => QueryEngine.IndexFile(st.getPath.toString, st.getLen))
   }
 
   // posting files per bucket, by range: listed on a bucket's first query
-  private val postingFiles = new ConcurrentHashMap[Int, Array[Array[PartitionedFile]]]()
+  private val postingFiles = new ConcurrentHashMap[Int, Array[Array[QueryEngine.IndexFile]]]()
 
-  /** (range, posting files) for every range holding files of the query
-    * terms' buckets, in range order. */
-  private[graft] def rangeFiles(terms: Seq[(String, String)]): Seq[(Int, Array[PartitionedFile])] = {
-    val buckets = terms.map { case (_, t) => IndexBuilder.bucketOf(t, manifest.buckets) }.distinct.sorted
-    val byBucket = buckets.map(b => postingFiles.computeIfAbsent(b,
-      _ => Array.tabulate(manifest.ranges)(r => parquetFiles(s"$dir/postings/bucket=$b/range=$r"))))
-    (0 until manifest.ranges).map(r => r -> byBucket.flatMap(_(r)).toArray).filter(_._2.nonEmpty)
+  /** The posting reads of `terms`, per chunk range: (query term index, file)
+    * for every file of the term's bucket in the range. Only ranges holding
+    * files of every term are listed (another range cannot match the AND),
+    * in range order. */
+  private[graft] def rangeFiles(terms: Seq[(String, String)]): Seq[(Int, Array[(Int, QueryEngine.IndexFile)])] = {
+    val byTerm = terms.map { case (_, t) =>
+      postingFiles.computeIfAbsent(IndexBuilder.bucketOf(t, manifest.buckets),
+        b => Array.tabulate(manifest.ranges)(r => parquetFiles(s"$dir/postings/bucket=$b/range=$r")))
+    }
+    (0 until manifest.ranges).filter(r => byTerm.forall(_(r).nonEmpty))
+      .map(r => r -> byTerm.zipWithIndex.flatMap { case (files, i) => files(r).map(i -> _) }.toArray)
   }
 
-  /** A parquet reader of whole files with `required` columns, `filters`
-    * pushed down to row groups. A fresh hadoop conf each: the format writes
-    * the read schema into it. */
-  private def parquetReader(data: StructType, required: StructType, filters: Seq[Filter])
-      : PartitionedFile => Iterator[InternalRow] =
-    new ParquetFileFormat().buildReaderWithPartitionValues(spark, data, new StructType(), required, filters,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
+  // the hadoop conf range tasks open index files with: one broadcast per
+  // engine, so a query builds no reader and ships no conf of its own
+  private lazy val hadoopConf: Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
 
-  private val PostingsRead = new StructType(IndexBuilder.PostingsSchema.fields.filter(f =>
-    Set("field", "term", "chunk", "blob").contains(f.name)))
+  /** Range `range`'s posting streams of `terms` (see [[QueryEngine.postingStreams]]),
+    * opened where called: the read one range task makes. */
+  private[graft] def postingStreams(terms: Seq[(String, String)], range: Int): Seq[Iterator[(Long, QueryEngine.ChunkRow)]] =
+    QueryEngine.postingStreams(hadoopConf.value.value, terms.toArray,
+      rangeFiles(terms).find(_._1 == range).fold(Array.empty[(Int, QueryEngine.IndexFile)])(_._2))
 
-  // the task-side norms source: each range's norms files and one reader,
-  // built once per engine
-  private lazy val normsFiles: Array[Array[PartitionedFile]] =
+  // each range's norms files, for the task-side norms read
+  private lazy val normsFiles: Array[Array[QueryEngine.IndexFile]] =
     Array.tabulate(manifest.ranges)(r => parquetFiles(s"$dir/norms/range=$r"))
-  private lazy val normsReader: PartitionedFile => Iterator[InternalRow] = {
-    val data = new StructType(IndexBuilder.NormsSchema.fields.filterNot(_.name == "range"))
-    parquetReader(data, new StructType(data.fields.take(3)), Nil) // field, chunk, blob
-  }
 
   /** Bucket partition pruning plus term pushdown for `terms` in termstats. */
   private def termFilter(terms: Seq[(String, String)]): Column = {
@@ -423,44 +432,128 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
   }
 
   /** The one posting read behind every conjunctive query, as ONE stage: a
-    * task per chunk range reads that range's posting files of the terms'
-    * buckets (a `FileScanRDD`; the (field, term) pairs pushed down prune row
-    * groups, so each row is checked again), groups the rows by chunk, and
-    * hands each chunk's (field, term, blob) rows to `kernel`, in chunk
-    * order. With `withNorms` the rows also carry the query fields' norms
-    * blobs for the chunk under [[QueryKernel.NormsTerm]]: from the
-    * broadcast map, else read from the range's norms files. */
+    * task per chunk range opens one stream per (posting file, query term)
+    * of the range, the term pushed down to row groups and checked again on
+    * each row. The build writes one file per (bucket, range), in (field,
+    * term, chunk) order, so that is one chunk-ascending stream per term;
+    * [[QueryEngine.byChunk]] merges them and `kernel` gets each chunk's
+    * (field, term, blob) rows in chunk order. A task holds one chunk's rows
+    * plus each stream's current row group, never its whole range. With
+    * `withNorms` the rows also carry the query fields' norms blobs for the
+    * chunk under [[QueryKernel.NormsTerm]]: from the broadcast map, else
+    * from the range's norms file, read the same way in the same chunk
+    * order. */
   private def perChunk[T: ClassTag](terms: Seq[(String, String)], withNorms: Boolean = false)(
-      kernel: (Long, Iterator[(String, String, Array[Byte])]) => Iterator[T]): RDD[T] = {
+      kernel: (Long, Iterator[QueryEngine.ChunkRow]) => Iterator[T]): RDD[T] = {
     val ranges = rangeFiles(terms)
-    val rangeOf = ranges.map(_._1).toArray
-    val wanted = terms.toSet
-    val fields = terms.map(_._1).distinct
-    val pushed: Filter = terms.map { case (f, t) => And(EqualTo("field", f), EqualTo("term", t)): Filter }.reduce(Or)
-    // (range, chunks) -> the (field, chunk) -> norms blob lookup
-    val normsOf: (Int, collection.Set[Long]) => collection.Map[(String, Long), Array[Byte]] =
-      if (!withNorms) (_, _) => Map.empty
+    val termArr = terms.toArray
+    val conf = hadoopConf
+    val fields = terms.map(_._1).distinct.toArray
+    // range -> the norms rows of a chunk, asked in ascending chunk order
+    val normsOf: Int => Long => Seq[QueryEngine.ChunkRow] =
+      if (!withNorms) _ => _ => Nil
       else normsLocal match {
-        case Some(b) => (_, _) => b.value
+        case Some(b) => _ => chunk =>
+          fields.toSeq.flatMap(f => b.value.get((f, chunk)).map(blob => (f, QueryKernel.NormsTerm, blob)))
         case None =>
-          val (files, read) = (normsFiles, normsReader)
-          (r, chunks) => files(r).iterator.flatMap(read)
-            .filter(row => chunks.contains(row.getLong(1)) && fields.contains(row.getUTF8String(0).toString))
-            .map(row => (row.getUTF8String(0).toString, row.getLong(1)) -> row.getBinary(2)).toMap
+          val files = normsFiles
+          r => {
+            lazy val norms = QueryEngine.byChunk(QueryEngine.normsStreams(conf.value.value, fields, files(r))).buffered
+            chunk => {
+              while (norms.hasNext && norms.head._1 < chunk) norms.next()
+              if (norms.hasNext && norms.head._1 == chunk) norms.head._2 else Nil
+            }
+          }
       }
-    val scan = new FileScanRDD(spark, parquetReader(PostingsRead, PostingsRead, Seq(pushed)),
-      ranges.zipWithIndex.map { case ((_, files), i) => FilePartition(i, files) }, PostingsRead)
-    scan.mapPartitionsWithIndex { (i, rows) =>
-      val byChunk = scala.collection.mutable.TreeMap[Long, ArrayBuffer[(String, String, Array[Byte])]]()
-      rows.foreach { row =>
-        val key = (row.getUTF8String(0).toString, row.getUTF8String(1).toString)
-        if (wanted.contains(key))
-          byChunk.getOrElseUpdate(row.getLong(2), ArrayBuffer()) += ((key._1, key._2, row.getBinary(3)))
+    spark.sparkContext.parallelize(ranges, math.max(1, ranges.size)).mapPartitions(_.flatMap { case (r, files) =>
+      val normsAt = normsOf(r)
+      QueryEngine.byChunk(QueryEngine.postingStreams(conf.value.value, termArr, files)).flatMap { case (chunk, rows) =>
+        kernel(chunk, rows.iterator ++ normsAt(chunk))
       }
-      val normsBlobs = if (byChunk.isEmpty) Map.empty[(String, Long), Array[Byte]] else normsOf(rangeOf(i), byChunk.keySet)
-      byChunk.iterator.flatMap { case (chunk, group) =>
-        val normRows = fields.flatMap(f => normsBlobs.get((f, chunk)).map(blob => (f, QueryKernel.NormsTerm, blob)))
-        kernel(chunk, group.iterator ++ normRows)
+    })
+  }
+}
+
+object QueryEngine {
+
+  /** A (field, term, blob) row handed to the kernel. */
+  type ChunkRow = (String, String, Array[Byte])
+
+  /** One parquet file of the index. */
+  final case class IndexFile(path: String, bytes: Long)
+
+  /** Reads only `columns` of a file. */
+  private final class ColumnsReadSupport(columns: Seq[String]) extends GroupReadSupport {
+    override def init(context: InitContext): ReadSupport.ReadContext = {
+      val file = context.getFileSchema
+      new ReadSupport.ReadContext(new MessageType(file.getName, columns.map(c => file.getType(file.getFieldIndex(c))): _*))
+    }
+  }
+
+  /** A reader of `columns` of `file` under `conf`. Not
+    * `ParquetReader.builder`: it makes a fresh hadoop `Configuration`
+    * (about 4 ms of XML parsing) for every file it opens. */
+  private final class GroupsReader(file: InputFile, conf: Configuration, columns: Seq[String])
+      extends ParquetReader.Builder[Group](file, new HadoopParquetConfiguration(conf)) {
+    override protected def getReadSupport(): ReadSupport[Group] = new ColumnsReadSupport(columns)
+  }
+
+  /** The records of `file` whose string columns equal `eq`, read with
+    * parquet's own reader: the predicate prunes row groups by their
+    * statistics and dictionaries and filters records, and each record is
+    * checked again. Only `columns` are read. The file closes when drained,
+    * or when the task ends. */
+  private def readMatching(conf: Configuration, file: IndexFile, columns: Seq[String],
+                           eq: Seq[(String, String)]): Iterator[Group] = {
+    val pred = eq.map { case (c, v) => FilterApi.eq(FilterApi.binaryColumn(c), Binary.fromString(v)): FilterPredicate }
+      .reduce(FilterApi.and(_, _))
+    val reader = new GroupsReader(HadoopInputFile.fromPath(new Path(file.path), conf), conf, columns)
+      .withFilter(FilterCompat.get(pred)).build()
+    var open = true
+    def close(): Unit = if (open) { open = false; reader.close() }
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
+    Iterator.continually(reader.read()).takeWhile { g => if (g == null) close(); g != null }
+      .filter(g => eq.forall { case (c, v) => g.getString(c, 0) == v })
+  }
+
+  private val PostingColumns = Seq("field", "term", "chunk", "blob")
+  private val NormsColumns = Seq("field", "chunk", "blob")
+
+  /** One chunk-ascending (chunk, row) stream per (term index, posting file)
+    * of `files`, the term pushed down. Each file opens here. */
+  private[graft] def postingStreams(conf: Configuration, terms: Array[(String, String)],
+                                    files: Array[(Int, IndexFile)]): Seq[Iterator[(Long, ChunkRow)]] =
+    files.toSeq.map { case (i, file) =>
+      val (f, t) = terms(i)
+      readMatching(conf, file, PostingColumns, Seq("field" -> f, "term" -> t))
+        .map(g => (g.getLong("chunk", 0), (f, t, g.getBinary("blob", 0).getBytes)))
+    }
+
+  /** One chunk-ascending (chunk, norms row) stream per (norms file, field),
+    * the field pushed down. */
+  private[graft] def normsStreams(conf: Configuration, fields: Array[String],
+                                  files: Array[IndexFile]): Seq[Iterator[(Long, ChunkRow)]] =
+    for (file <- files.toSeq; f <- fields.toSeq) yield
+      readMatching(conf, file, NormsColumns, Seq("field" -> f))
+        .map(g => (g.getLong("chunk", 0), (f, QueryKernel.NormsTerm, g.getBinary("blob", 0).getBytes)))
+
+  /** Merges chunk-ascending (chunk, value) streams into (chunk, that chunk's
+    * values), in chunk order. It holds one chunk's values plus one head per
+    * stream at a time. A stream that steps back (a file out of chunk order)
+    * fails loudly instead of splitting a chunk. */
+  private[graft] def byChunk[A](streams: Seq[Iterator[(Long, A)]]): Iterator[(Long, Seq[A])] = {
+    val heads = streams.map(_.buffered).toArray
+    new Iterator[(Long, Seq[A])] {
+      def hasNext: Boolean = heads.exists(_.hasNext)
+      def next(): (Long, Seq[A]) = {
+        val chunk = heads.iterator.filter(_.hasNext).map(_.head._1).min
+        val group = ArrayBuffer[A]()
+        heads.foreach { h =>
+          while (h.hasNext && h.head._1 == chunk) group += h.next()._2
+          if (h.hasNext && h.head._1 < chunk)
+            throw new IllegalStateException(s"stream not in chunk order: chunk ${h.head._1} after $chunk")
+        }
+        (chunk, group.toSeq)
       }
     }
   }

@@ -47,10 +47,10 @@ class EndToEndSpec extends SparkFunSuite {
 
   /** A fresh engine on the task-side norms path (a norms cache cap of 0):
     * each range task reads its own norms files. */
-  private def taskNormsEngine(): QueryEngine = {
+  private def taskNormsEngine(dir: String = indexDir): QueryEngine = {
     val prop = "graft.norms.cache.max.bytes"
     sys.props(prop) = "0"
-    try new QueryEngine(spark, indexDir) finally sys.props.remove(prop)
+    try new QueryEngine(spark, dir) finally sys.props.remove(prop)
   }
 
   test("driver flagship entry() returns rows at sf0.001") {
@@ -213,15 +213,82 @@ class EndToEndSpec extends SparkFunSuite {
       assert(rows.forall(r => r.getInt(1) == rangeOf(r.getLong(0))), t)
       assert(rows.map(_.getInt(1)).distinct.sorted.toSeq == (0 until m.ranges), t)
     }
-    // one file per (bucket, range) directory
-    buckets.foreach { b =>
-      new java.io.File(s"$indexDir/postings/$b").listFiles().foreach { r =>
-        assert(r.getName.startsWith("range=") && r.listFiles().count(_.getName.endsWith(".parquet")) == 1, s"$b/$r")
+    // one file per (bucket, range) and per norms range: a range task reads
+    // each query term as one stream
+    def parquetIn(d: java.io.File) = d.listFiles().count(_.getName.endsWith(".parquet"))
+    val rangeDirs = buckets.flatMap(b => new java.io.File(s"$indexDir/postings/$b").listFiles()) ++
+      new java.io.File(s"$indexDir/norms").listFiles().filter(_.getName.startsWith("range="))
+    assert(rangeDirs.nonEmpty && rangeDirs.forall(_.getName.startsWith("range=")))
+    rangeDirs.foreach(d => assert(parquetIn(d) == 1, d.toString))
+    // within each file, every (field, term)'s posting rows and every
+    // field's norms rows are chunk-ascending: the order a range task streams
+    // them in
+    Seq("postings" -> (IndexBuilder.PostingsSchema, Seq("field", "term")),
+        "norms" -> (IndexBuilder.NormsSchema, Seq("field"))).foreach { case (t, (schema, key)) =>
+      val rows = spark.read.schema(schema).parquet(s"$indexDir/$t")
+        .select((input_file_name() +: col("chunk") +: key.map(col)): _*).collect()
+      rows.groupBy(r => (r.getString(0), (2 until r.length).map(r.getString))).foreach { case (k, rs) =>
+        val chunks = rs.map(_.getLong(1)).toSeq
+        assert(chunks == chunks.sorted, s"$t $k chunks $chunks")
       }
     }
     val ds = spark.read.parquet(s"$indexDir/docstore").select("docId").collect().map(_.getLong(0))
     assert(ds.length == N)
     assert(ds.toSeq.sorted == (0L until N))
+  }
+
+  test("a range task holds one chunk's rows at a time, over many chunks per range") {
+    // 16 chunks of 64 docs in 2 ranges (2 shuffle partitions)
+    val n = 1024L
+    val dir = SparkSpec.tmpDir("graft-ranges")
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try IndexBuilder.build(spark, TranscriptGen.turns(spark, n, 4).toDF(), dir,
+      IndexConfig(buckets = 4, chunkDocs = 64, blockSize = 16))
+    finally spark.conf.set(key, saved)
+    val e = new QueryEngine(spark, dir)
+    assert(e.manifest.ranges == 2)
+    val docs = DocIds.assign(TranscriptGen.turns(spark, n, 4).toDF())
+      .select("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts").as[DocTurn].collect().toSeq.sortBy(_.docId)
+    val orc = Bm25Oracle.buildIndex(docs)
+
+    // the two most frequent text terms' range-0 rows: one file per (bucket,
+    // range), so one stream per term, merged by chunk
+    val terms = orc.tfs.keys.filter(_._1 == "text").toSeq.sortBy(t => (-orc.tfs(t).size, t._2)).take(2)
+    assert(e.rangeFiles(terms).head._2.map(_._1).toSeq == Seq(0, 1))
+    var pulled = 0
+    val streams = e.postingStreams(terms, 0).map(_.map { x => pulled += 1; x })
+    var released = 0
+    val chunks = QueryEngine.byChunk(streams).map { case (chunk, rows) =>
+      // held now: this chunk's rows plus one read-ahead row per stream
+      assert(pulled - released <= rows.size + streams.size, s"chunk $chunk")
+      assert(rows.map(r => (r._1, r._2)).sorted == terms.filter(t => orc.tfs(t).keys.exists(_ / 64 == chunk)).sorted,
+        s"chunk $chunk")
+      released += rows.size
+      chunk
+    }.toList
+    assert(chunks == terms.flatMap(t => orc.tfs(t).keys.map(_ / 64)).filter(_ < 8).distinct.sorted)
+    assert(chunks.size >= 6 && released == pulled)
+
+    // and the queries stay exact on both norms paths
+    Seq("broadcast" -> e, "task-side norms" -> taskNormsEngine(dir)).foreach { case (path, eng) =>
+      queries.foreach { case (name, q) =>
+        val got = eng.topK(q).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(got == Bm25Oracle.topK(orc, q), s"$path $name")
+        assert(eng.matchCount(q) == Bm25Oracle.stats(orc, q).total, s"$path $name")
+        val posts = q.terms.map(t => orc.tfs.getOrElse(t, Map.empty[Long, Int]).keySet)
+        assert(eng.matchingDocIds(q).collect().map(_.getLong(0)).toSeq == posts.reduce(_ intersect _).toSeq.sorted,
+          s"$path $name")
+      }
+    }
+  }
+
+  test("byChunk merges chunk-ascending streams and refuses one that steps back") {
+    val merged = QueryEngine.byChunk(Seq(Iterator(1L -> "a", 4L -> "b"), Iterator.empty, Iterator(1L -> "c", 2L -> "d")))
+    assert(merged.toList == List(1L -> Seq("a", "c"), 2L -> Seq("d"), 4L -> Seq("b")))
+    val e = intercept[IllegalStateException](QueryEngine.byChunk(Seq(Iterator(3L -> 0, 1L -> 0))).toList)
+    assert(e.getMessage.contains("chunk order"), e.getMessage)
   }
 
   test("count-only kernel: matchCount == oracle intersection size on the query set") {
