@@ -1,8 +1,8 @@
 package graft
 
 /** Local-filesystem helpers shared by the bench/diagnostic mains and the
-  * norms sidecar sizing (one recursive walker instead of a copy per call
-  * site; null-safe against racing deletes). */
+  * stores (one recursive walker instead of a copy per call site; null-safe
+  * against racing deletes). */
 object FsUtil {
   def dirSize(f: java.io.File): Long =
     if (f.isDirectory) Option(f.listFiles()).map(_.map(dirSize).sum).getOrElse(0L)

@@ -67,7 +67,7 @@ object IndexBuilder {
 
   /** Bumped on any change to the on-disk index layout; stamped into buildId
     * so cached indexes from older code are detected as stale. */
-  val LayoutVersion = 5
+  val LayoutVersion = 6
 
   /** On-disk schemas, data columns then partition columns. Readers pass them
     * instead of inferring one, which costs a Spark job per table. */
@@ -312,18 +312,14 @@ object IndexBuilder {
     // header stats: df (uv) + pv per term, reference header semantics
     // (InvertedIndexGenerateReducer.java:390-395). Derived from the chunk
     // rows — a #(term,chunk)-row aggregate — instead of re-shuffling every
-    // occurrence row a second time.
-    // persisted: consumed by BOTH the encode join and the termstats write —
-    // unpersisted it re-scans the heavy groupedRaw cache (deserializing every
-    // posting array a second time just to size it); the persisted frame is
-    // vocab-sized (field, term, bucket, df, pv), tiny next to the arrays
+    // occurrence row a second time. Only the termstats write reads it: the
+    // posting blobs do not depend on df.
     val stats = groupedRaw
       .select(col("field"), col("term"), col("bucket"),
         size(col("p.docIds")).cast("long").as("dfc"),
         expr("aggregate(p.tfs, CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("pvc"))
       .groupBy("field", "term", "bucket")
       .agg(sum("dfc").as("df"), sum("pvc").as("pv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // optional truncation cap (isInvalidData mirror): running doc count per
     // term over chunk order; drop/trim chunks past the cap. The window
@@ -344,29 +340,22 @@ object IndexBuilder {
           slice(col("p.dls"), lit(1), col("keep")).as("dls")))
         .drop("prior", "keep")
     }
-    // no broadcast hint here on purpose: stats is vocab-sized (can be tens
-    // of GB at web scale) — AQE converts to broadcast at runtime when it IS
-    // small; a measured A/B at 2M turns showed the hint changes nothing
-    // (the phase cost is encode+write, not this join)
-    val grouped = capped
-      .join(stats.select("field", "term", "df"), Seq("field", "term"))
-
-    val n = numDocs
+    // blocks are stamped with max tfNorm, idf-free (PostingCodec.encode):
+    // a blob needs no corpus-wide df
     val avgdlB = spark.sparkContext.broadcast(avgdl)
     val blockSize = cfg.blockSize
-    val encodeU = udf((docIds: Seq[Long], tfs: Seq[Int], dls: Seq[Int], df: Long, field: String) => {
-      val idf = Bm25.idf(n, df)
+    val encodeU = udf((docIds: Seq[Long], tfs: Seq[Int], dls: Seq[Int], field: String) => {
       val avg = avgdlB.value(field)
       val arr = new Array[Posting](docIds.length)
       var i = 0
       while (i < arr.length) { arr(i) = Posting(docIds(i), tfs(i), dls(i)); i += 1 }
-      PostingCodec.encode(arr, (tf, dl) => Bm25.contribution(tf, dl, idf, avg), blockSize)
+      PostingCodec.encode(arr, (tf, dl) => Bm25.tfNorm(tf, dl, avg), blockSize)
     })
 
-    val postingRows = grouped.select(
+    val postingRows = capped.select(
       col("field"), col("term"), col("bucket"), col("chunk"),
       size(col("p.docIds")).cast("long").as("dfChunk"),
-      encodeU(col("p.docIds"), col("p.tfs"), col("p.dls"), col("df"), col("field")).as("blob"))
+      encodeU(col("p.docIds"), col("p.tfs"), col("p.dls"), col("field")).as("blob"))
 
     // (groupedRaw cache materializes with the first consumer — no extra job)
 
@@ -392,9 +381,13 @@ object IndexBuilder {
           .sortWithinPartitions("bucket", "range", "field", "term", "chunk")
         part.write.mode("overwrite").partitionBy("bucket", "range").parquet(s"$dir/postings")
         phase(s"postings_g$g")
+        // one task per bucket dir: files stay bounded by #buckets, not
+        // tasks x buckets (commit cost is per file). (field, term) order
+        // lets row-group statistics prune a term pushdown read of the
+        // bucket; the partition column leads the sort, as above.
         stats.filter(col("bucket") % groups === g)
-          .repartition(col("bucket")) // one task per bucket dir: files stay
-          // bounded by #buckets, not tasks x buckets (commit cost is per file)
+          .repartition(col("bucket"))
+          .sortWithinPartitions("bucket", "field", "term")
           .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/termstats")
         phase(s"termstats_g$g")
         val wallMs = (System.nanoTime() - t0) / 1000000L
@@ -411,7 +404,7 @@ object IndexBuilder {
 
     val manifest = IndexManifest(buildId, numDocs, cfg.buckets, cfg.chunkDocs, cfg.blockSize, ranges, avgdl)
     writeManifest(fs, new Path(manifestDir, "core.json"), manifest, phasesMs.toSeq)
-    groupedRaw.unpersist(); stats.unpersist(); sortedHandle.unpersist()
+    groupedRaw.unpersist(); sortedHandle.unpersist()
     manifest
   }
 

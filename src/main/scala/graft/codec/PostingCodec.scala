@@ -18,7 +18,10 @@ import graft.model.Posting
   *    of index bytes). Readers take a `dlOf: docId => dl` lookup backed by
   *    the chunk's norm array.
   *  - postings are cut into fixed-size blocks, each with (lastDocId,
-  *    maxScore) — the block-max metadata WAND uses to skip blocks.
+  *    maxScore) — the block-max metadata WAND uses to skip blocks. The
+  *    index stamps the block's max BM25 tfNorm, idf-free, so a blob does
+  *    not depend on corpus-wide df; the query multiplies it by the term's
+  *    idf (see [[encode]]).
   *
   * Layout (all varints unless noted):
   *   numPostings, blockSize,
@@ -86,8 +89,10 @@ object PostingCodec {
   // ---- encode ----
 
   /** Encode postings (MUST be sorted by docId ascending, docIds unique).
-    * `score(tf, dl)` is the full per-posting BM25 contribution (idf included),
-    * evaluated at build time to stamp per-block maxima.
+    * `score(tf, dl)` is evaluated at build time to stamp per-block maxima;
+    * the index passes BM25 tfNorm (max tfNorm, idf-free). For any idf >= 0,
+    * round-to-nearest multiplication is monotone, so idf * the stamp equals,
+    * bit for bit, the stamp of the full contribution idf * tfNorm.
     */
   def encode(postings: Array[Posting], score: (Int, Int) => Double,
              blockSize: Int = DefaultBlockSize): Array[Byte] = {
@@ -162,7 +167,8 @@ object PostingCodec {
     * Protocol: call advance()/advanceTo() first; `docId/tf/dl` are valid only
     * after a call returned true. advanceTo skips whole blocks via each block's
     * stored lastDocId without decoding their entries; `blockMaxScore` exposes
-    * the current block's max BM25 contribution for block-max pruning.
+    * the current block's stamp (in the index: max tfNorm) for block-max
+    * pruning.
     */
   final class Cursor(bytes: Array[Byte], dlOf: Long => Int = _ => 0) {
     private val r = new ByteReader(bytes)

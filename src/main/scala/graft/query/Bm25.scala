@@ -12,7 +12,9 @@ package graft.query
   *
   * ONE implementation shared by the engine, the build-time block-max stamps,
   * and the brute-force oracle, so "scores match exactly" is FP-stable: same
-  * constants, same `math.log`, same summation order (SURVEY.md §7.6).
+  * constants, same `math.log`, same summation order (SURVEY.md §7.6). The
+  * stamps are max tfNorm, with no idf: the kernel multiplies the stamp by
+  * the term's idf, which equals the max of `contribution` bit for bit.
   */
 object Bm25 {
   val K1 = 1.2

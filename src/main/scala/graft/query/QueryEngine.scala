@@ -173,19 +173,17 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     * (interactive-scale index), collect it once per engine into one
     * broadcast (field, chunk) -> blob map. Plans then carry only the
     * broadcast handle and each kernel task looks up its chunks' rows. Above
-    * the size cap (or on non-local storage) each task reads its own range's
-    * norms files instead (see [[perChunk]]). Both paths stay: a task-side
-    * read on every query measured 57 -> 71 ms topK p50 against the
-    * broadcast at perfbench size (ROADMAP item 1). */
+    * the size cap (the byte sum of the norms files' listing) each task
+    * reads its own range's norms files instead (see [[perChunk]]). Both
+    * paths stay: the streamed task-side read on every query measured even
+    * with the broadcast on `selective` but slower on `broad` (fetch p50
+    * 216 -> 289 ms, topK p50 73 -> 88 ms over 4 pairs; ROADMAP item 1). */
   private val NormsCacheMaxBytes = // sys-prop override so specs cover BOTH paths
     sys.props.get("graft.norms.cache.max.bytes").map(_.toLong).getOrElse(64L << 20)
-  private lazy val normsLocal: Option[Broadcast[Map[(String, Long), Array[Byte]]]] = {
-    val normsDir = new java.io.File(dir, "norms")
-    // non-local paths (hdfs:// etc.) fail exists() -> task-side reads
-    if (!normsDir.exists() || graft.FsUtil.dirSize(normsDir) > NormsCacheMaxBytes) None
+  private lazy val normsLocal: Option[Broadcast[Map[(String, Long), Array[Byte]]]] =
+    if (normsFiles.iterator.flatten.map(_.bytes).sum > NormsCacheMaxBytes) None
     else Some(spark.sparkContext.broadcast(norms.select("field", "chunk", "blob").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getAs[Array[Byte]](2)).toMap))
-  }
 
   /** The parquet files of one directory of the index, by name; none when
     * the directory is absent. */
@@ -245,14 +243,13 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     * loads only buckets whose termstats files hold at most `maxBucketBytes`.
     * ONE bucket-pruned termstats scan serves all of `terms`' buckets not
     * resident yet: it reads each such bucket within the byte cap whole, and
-    * from a bucket past it (or of unknown size: non-local storage) only the
-    * query's terms. A whole bucket is published with putIfAbsent (a
-    * concurrent duplicate load is harmless: both read the same immutable
-    * index) unless it alone holds more than `maxEntries` entries; the
-    * dictionary is cleared wholesale first when the publish would pass
-    * `maxEntries`. The result assembles from bucket maps held in local
-    * references, so a concurrent (or our own) clear can never drop a term
-    * mid-query. */
+    * from a bucket past it only the query's terms. A whole bucket is
+    * published with putIfAbsent (a concurrent duplicate load is harmless:
+    * both read the same immutable index) unless it alone holds more than
+    * `maxEntries` entries; the dictionary is cleared wholesale first when
+    * the publish would pass `maxEntries`. The result assembles from bucket
+    * maps held in local references, so a concurrent (or our own) clear can
+    * never drop a term mid-query. */
   private[graft] def dictionaryLookup(terms: Seq[(String, String)], maxEntries: Int, maxBucketBytes: Long)
       : Map[(String, String), (Long, Long)] = {
     val bucketOf = terms.map { case (_, t) => t -> IndexBuilder.bucketOf(t, manifest.buckets) }.toMap
@@ -280,12 +277,9 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     terms.flatMap(k => dict(bucketOf(k._2)).get(k).map(k -> _)).toMap
   }
 
-  /** Bytes of termstats bucket `b`'s files; unknown (Long.MaxValue) off the
-    * local filesystem, where [[normsLocal]]'s sizing fails the same way. */
-  private def termstatsBytes(b: Int): Long = {
-    val root = new java.io.File(dir, "termstats")
-    if (!root.exists()) Long.MaxValue else graft.FsUtil.dirSize(new java.io.File(root, s"bucket=$b"))
-  }
+  /** Bytes of each termstats bucket's files, listed once per engine. */
+  private lazy val termstatsBytes: Array[Long] =
+    Array.tabulate(manifest.buckets)(b => parquetFiles(s"$dir/termstats/bucket=$b").map(_.bytes).sum)
 
   /** Top-k (docId, score), exact BM25 over the AND intersection; the plan is
     * cached per (terms, k). */
@@ -681,12 +675,12 @@ object QueryKernel extends Serializable {
   /** Conjunctive document-at-a-time traversal with block-max skipping.
     *
     * When the heap holds k results, a driver block whose upper bound (its
-    * block-max + the other terms' static score ceilings idf*(k1+1)) cannot
-    * beat the current kth score is skipped without decoding — block-max
-    * WAND; exact because the bound is conservative and within a chunk later
-    * candidates have larger docIds (tie order score desc / docId asc
-    * preserved). `rows` carries the chunk's postings and the query fields'
-    * norms under [[NormsTerm]].
+    * idf * block-max tfNorm + the other terms' static score ceilings
+    * idf*(k1+1)) cannot beat the current kth score is skipped without
+    * decoding — block-max WAND; exact because the bound is conservative and
+    * within a chunk later candidates have larger docIds (tie order score
+    * desc / docId asc preserved). `rows` carries the chunk's postings and
+    * the query fields' norms under [[NormsTerm]].
     */
   def scoreChunk(
       terms: Array[(String, String)],
@@ -728,7 +722,9 @@ object QueryKernel extends Serializable {
         val threshold = heap.head._2
         var skipped = true
         while (w.alive && skipped) {
-          if (drv.blockMaxScore + othersCeil <= threshold) {
+          // idf > 0 and rounding is monotone: idf * the block's max tfNorm
+          // is bit for bit the block's max contribution
+          if (idfs(w.order(0)) * drv.blockMaxScore + othersCeil <= threshold) {
             val lastBefore = drv.blockLastDocId
             w.alive = drv.advanceTo(lastBefore + 1)
             // no-progress guard: on a corrupt blob (entry docIds beyond the

@@ -5,6 +5,7 @@ import scala.util.Random
 
 import graft.codec.PostingCodec
 import graft.model.Posting
+import graft.query.Bm25
 
 /** Property-style tests over seeded random posting lists (100 cases each;
   * no scalatestplus bridge in the offline cache, so generation is manual). */
@@ -127,6 +128,26 @@ class CodecSpec extends AnyFunSuite {
     while (c.advance()) {
       assert(score(c.tf, c.dl) <= c.blockMaxScore + 1e-12)
       assert(c.docId <= c.blockLastDocId)
+    }
+  }
+
+  test("idf * a tfNorm stamp == the stamp of idf * tfNorm, bit for bit, every block") {
+    val rnd = new Random(5)
+    (1 to 100).foreach { _ =>
+      val ps = randomPostings(rnd)
+      val avgdl = 1.0 + rnd.nextDouble() * 500
+      val n = 1L + rnd.nextLong(1L << 40)
+      val idf = Bm25.idf(n, 1L + rnd.nextLong(n))
+      val bs = 1 + rnd.nextInt(64)
+      val norm = new PostingCodec.Cursor(PostingCodec.encode(ps, (tf, dl) => Bm25.tfNorm(tf, dl, avgdl), bs))
+      val full = new PostingCodec.Cursor(PostingCodec.encode(ps, (tf, dl) => Bm25.contribution(tf, dl, idf, avgdl), bs))
+      while (norm.advance()) {
+        assert(full.advance())
+        val (got, want) = (idf * norm.blockMaxScore, full.blockMaxScore)
+        assert(java.lang.Double.doubleToRawLongBits(got) == java.lang.Double.doubleToRawLongBits(want),
+          s"idf=$idf avgdl=$avgdl doc=${norm.docId}: $got != $want")
+      }
+      assert(!full.advance())
     }
   }
 

@@ -232,6 +232,15 @@ class EndToEndSpec extends SparkFunSuite {
         assert(chunks == chunks.sorted, s"$t $k chunks $chunks")
       }
     }
+    // every termstats file is (field, term)-ascending, so row-group
+    // statistics can prune a term pushdown read of its bucket
+    val ts = spark.read.schema(IndexBuilder.TermstatsSchema).parquet(s"$indexDir/termstats")
+      .select(input_file_name(), col("field"), col("term")).collect()
+    assert(ts.nonEmpty)
+    ts.groupBy(_.getString(0)).foreach { case (f, rs) =>
+      val keys = rs.map(r => (r.getString(1), r.getString(2))).toSeq
+      assert(keys == keys.sorted, s"termstats $f")
+    }
     val ds = spark.read.parquet(s"$indexDir/docstore").select("docId").collect().map(_.getLong(0))
     assert(ds.length == N)
     assert(ds.toSeq.sorted == (0L until N))
@@ -316,11 +325,11 @@ class EndToEndSpec extends SparkFunSuite {
 
   /** A fresh engine on the serving profile (perfbench's and graft.Bench's):
     * adaptive re-planning off, so a ranked query is one job. */
-  private def servingEngine(): QueryEngine = {
+  private def servingEngine(dir: String = indexDir): QueryEngine = {
     built
     val serve = spark.newSession()
     serve.conf.set("spark.sql.adaptive.enabled", "false")
-    new QueryEngine(serve, indexDir)
+    new QueryEngine(serve, dir)
   }
 
   /** (Spark jobs, their stages) `f` submits from this thread. */
@@ -351,21 +360,24 @@ class EndToEndSpec extends SparkFunSuite {
     oracle.tfs.get(t).map(m => (m.size.toLong, m.values.map(_.toLong).sum))
 
   test("term dictionary: a loaded bucket answers present and absent terms with no job") {
-    val e = servingEngine()
     val first = ("text", "error")
     val b = bucketOf(first._2)
     val other = oracle.tfs.keys.toSeq.sorted.find { case (f, t) => f == "text" && t != first._2 && bucketOf(t) == b }.get
     val absent = Iterator.from(0).map(i => ("text", s"zzzabsent$i")).find(t => bucketOf(t._2) == b).get
-    assert(jobsOf(e.topK(single(first)).collect()) == 3) // loads bucket b, the norms, then the kernel
-    var got: Map[(String, String), (Long, Long)] = null
-    assert(jobsOf { got = e.termStatsOf(single(other)) } == 0, s"present $other in loaded bucket $b")
-    assert(got == oracleStats(other).map(other -> _).toMap)
-    assert(jobsOf { got = e.termStatsOf(single(absent)) } == 0, s"absent $absent in loaded bucket $b")
-    assert(got.isEmpty)
-    // a new key whose terms are all resident: the kernel job only
-    var hits: Seq[(Long, Double)] = Nil
-    assert(jobsOf { hits = e.topK(single(other)).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq } == 1)
-    assert(hits == Bm25Oracle.topK(oracle, single(other)))
+    // a URI with a scheme is sized from the same file listing as a path
+    Seq(indexDir, "file://" + indexDir).foreach { dir =>
+      val e = servingEngine(dir)
+      assert(jobsOf(e.topK(single(first)).collect()) == 3, dir) // loads bucket b, the norms, then the kernel
+      var got: Map[(String, String), (Long, Long)] = null
+      assert(jobsOf { got = e.termStatsOf(single(other)) } == 0, s"$dir: present $other in loaded bucket $b")
+      assert(got == oracleStats(other).map(other -> _).toMap)
+      assert(jobsOf { got = e.termStatsOf(single(absent)) } == 0, s"$dir: absent $absent in loaded bucket $b")
+      assert(got.isEmpty)
+      // a new key whose terms are all resident: the kernel job only
+      var hits: Seq[(Long, Double)] = Nil
+      assert(jobsOf { hits = e.topK(single(other)).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq } == 1, dir)
+      assert(hits == Bm25Oracle.topK(oracle, single(other)), dir)
+    }
   }
 
   test("term dictionary: single-term termStatsOf == the termstats table, one job per bucket at most") {
@@ -396,14 +408,15 @@ class EndToEndSpec extends SparkFunSuite {
     assert(stats == Bm25Oracle.stats(oracle, q) && stats.total > 0)
   }
 
-  test("layout v5 reader refuses a v4 index with a message naming both layouts") {
-    val dir = SparkSpec.tmpDir("graft-v4")
+  test("the reader refuses an index of the previous layout with a message naming both layouts") {
+    val old = IndexBuilder.LayoutVersion - 1
+    val dir = SparkSpec.tmpDir(s"graft-v$old")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "_manifest"))
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_manifest", "core.json"),
-      """{"buildId":"build-v4-3000-8-256-1a2b3c","numDocs":3000,"buckets":8,"chunkDocs":256,"blockSize":32,""" +
-        """"avgdl":{"role":1.0,"text":9.5,"tool":1.0},"phasesMs":{}}""")
+      s"""{"buildId":"build-v$old-3000-8-256-4-1a2b3c","numDocs":3000,"buckets":8,"chunkDocs":256,"blockSize":32,""" +
+        """"ranges":4,"avgdl":{"role":1.0,"text":9.5,"tool":1.0},"phasesMs":{}}""")
     val e = intercept[IllegalArgumentException](new QueryEngine(spark, dir))
-    Seq("layout v4", s"layout v${IndexBuilder.LayoutVersion}", "rebuild").foreach { s =>
+    Seq(s"layout v$old", s"layout v${IndexBuilder.LayoutVersion}", "rebuild").foreach { s =>
       assert(e.getMessage.contains(s), e.getMessage)
     }
   }
