@@ -408,8 +408,9 @@ class EndToEndSpec extends SparkFunSuite {
     assert(stats == Bm25Oracle.stats(oracle, q) && stats.total > 0)
   }
 
-  test("the reader refuses an index of the previous layout with a message naming both layouts") {
-    val old = IndexBuilder.LayoutVersion - 1
+  /** Opening an engine on a manifest of layout `old` fails, naming `old`,
+    * the reader's layout and the cure. */
+  private def assertRefusesLayout(old: Int): Unit = {
     val dir = SparkSpec.tmpDir(s"graft-v$old")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "_manifest"))
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_manifest", "core.json"),
@@ -419,6 +420,15 @@ class EndToEndSpec extends SparkFunSuite {
     Seq(s"layout v$old", s"layout v${IndexBuilder.LayoutVersion}", "rebuild").foreach { s =>
       assert(e.getMessage.contains(s), e.getMessage)
     }
+  }
+
+  // named when the reader was layout v5; every later reader refuses v4 too
+  test("layout v5 reader refuses a v4 index with a message naming both layouts") {
+    assertRefusesLayout(4)
+  }
+
+  test("the reader refuses an index of the previous layout with a message naming both layouts") {
+    assertRefusesLayout(IndexBuilder.LayoutVersion - 1)
   }
 
   /** (field, term) rows in `t`'s termstats bucket. */
