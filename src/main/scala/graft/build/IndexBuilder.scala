@@ -313,7 +313,8 @@ object IndexBuilder {
     // (InvertedIndexGenerateReducer.java:390-395). Derived from the chunk
     // rows — a #(term,chunk)-row aggregate — instead of re-shuffling every
     // occurrence row a second time. Only the termstats write reads it: the
-    // posting blobs do not depend on df.
+    // posting blobs do not depend on df. Not persisted, so with several
+    // bucket groups each group re-aggregates its own buckets from the cache.
     val stats = groupedRaw
       .select(col("field"), col("term"), col("bucket"),
         size(col("p.docIds")).cast("long").as("dfc"),

@@ -277,9 +277,10 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     terms.flatMap(k => dict(bucketOf(k._2)).get(k).map(k -> _)).toMap
   }
 
-  /** Bytes of each termstats bucket's files, listed once per engine. */
-  private lazy val termstatsBytes: Array[Long] =
-    Array.tabulate(manifest.buckets)(b => parquetFiles(s"$dir/termstats/bucket=$b").map(_.bytes).sum)
+  // bytes of each termstats bucket's files: listed on the bucket's first lookup
+  private val termstatsSizes = new ConcurrentHashMap[Int, java.lang.Long]()
+  private def termstatsBytes(b: Int): Long =
+    termstatsSizes.computeIfAbsent(b, _ => parquetFiles(s"$dir/termstats/bucket=$b").map(_.bytes).sum)
 
   /** Top-k (docId, score), exact BM25 over the AND intersection; the plan is
     * cached per (terms, k). */

@@ -408,27 +408,32 @@ class EndToEndSpec extends SparkFunSuite {
     assert(stats == Bm25Oracle.stats(oracle, q) && stats.total > 0)
   }
 
-  /** Opening an engine on a manifest of layout `old` fails, naming `old`,
-    * the reader's layout and the cure. */
-  private def assertRefusesLayout(old: Int): Unit = {
+  /** Opening an engine on `manifest`, a core.json of layout `old`, fails,
+    * naming `old`, the reader's layout and the cure. */
+  private def assertRefusesLayout(old: Int, manifest: String): Unit = {
     val dir = SparkSpec.tmpDir(s"graft-v$old")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "_manifest"))
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_manifest", "core.json"),
-      s"""{"buildId":"build-v$old-3000-8-256-4-1a2b3c","numDocs":3000,"buckets":8,"chunkDocs":256,"blockSize":32,""" +
-        """"ranges":4,"avgdl":{"role":1.0,"text":9.5,"tool":1.0},"phasesMs":{}}""")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_manifest", "core.json"), manifest)
     val e = intercept[IllegalArgumentException](new QueryEngine(spark, dir))
     Seq(s"layout v$old", s"layout v${IndexBuilder.LayoutVersion}", "rebuild").foreach { s =>
       assert(e.getMessage.contains(s), e.getMessage)
     }
   }
 
-  // named when the reader was layout v5; every later reader refuses v4 too
+  // named when the reader was layout v5; every later reader refuses v4 too.
+  // A v4 manifest has no "ranges" and a 4-part buildId: the reader must
+  // still parse it to refuse it readably.
   test("layout v5 reader refuses a v4 index with a message naming both layouts") {
-    assertRefusesLayout(4)
+    assertRefusesLayout(4,
+      """{"buildId":"build-v4-3000-8-256-1a2b3c","numDocs":3000,"buckets":8,"chunkDocs":256,"blockSize":32,""" +
+        """"avgdl":{"role":1.0,"text":9.5,"tool":1.0},"phasesMs":{}}""")
   }
 
   test("the reader refuses an index of the previous layout with a message naming both layouts") {
-    assertRefusesLayout(IndexBuilder.LayoutVersion - 1)
+    val old = IndexBuilder.LayoutVersion - 1
+    assertRefusesLayout(old,
+      s"""{"buildId":"build-v$old-3000-8-256-4-1a2b3c","numDocs":3000,"buckets":8,"chunkDocs":256,"blockSize":32,""" +
+        """"ranges":4,"avgdl":{"role":1.0,"text":9.5,"tool":1.0},"phasesMs":{}}""")
   }
 
   /** (field, term) rows in `t`'s termstats bucket. */
